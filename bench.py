@@ -2,7 +2,7 @@
 
 Usage: python bench.py
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-       SPARK_GRAFT_CPUS   (default 32)
+       SPARK_GRAFT_CPUS   (default: the cores in this process's affinity set)
        SPARK_GRAFT_BENCH_QUERIES (comma-separated registry names; default
            the headline set — the scale experiments use this to time the
            TPC-H completion suite with the same warm/min-of-3 method)

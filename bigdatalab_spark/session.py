@@ -19,7 +19,12 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
 def _local_cpus() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """Local-mode core count: ``SPARK_GRAFT_CPUS`` when set, else the
+    cores this process may run on (its CPU affinity set)."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS")
+    if raw is None:
+        return len(os.sched_getaffinity(0))
+    return int(raw)
 
 
 def _local_split_bytes(sf_dir: str | None = None, cpus: int | None = None) -> int:

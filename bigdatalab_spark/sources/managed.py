@@ -8,18 +8,11 @@ but wiring them by hand leaves two gaps a real table format never has:
 nothing guarantees the index tracks a version flip, and a compaction
 rewrite silently orphans the index built over the pre-compaction file
 names. This module closes both by making the index PART of the
-snapshot:
-
-    path/v=1/part-*.parquet          (immutable data files)
-    path/v=1/_index/*.parquet        (skipping index FOR v=1 — relative
-                                      file names, so hard-linked files
-                                      keep their index rows)
-    path/v=1/_manifest/*.parquet     (file manifest FOR v=1: relative
-                                      name + size per data file — the
-                                      planning source of truth)
-    path/v=1/_COMMITTED              (marker: data AND index complete)
-    path/v=2/...
-    path/_latest                     (atomic pointer: "2")
+snapshot. The on-disk layout (version directories, marker, pointer,
+manifest, schema, index and change-feed stores) is stated once, in
+sources/versioned.py, which owns its names and its marker, pointer,
+manifest and change-feed logic; index file names are relative, so
+hard-linked files keep their index rows.
 
 Atomicity story (the reference's managed-table semantics,
 303-spark-sql/README.md:66-73, rebuilt for 100 TB): a version is
@@ -92,45 +85,45 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdatalab_spark.plans.compile import flat_plan_scope
 from bigdatalab_spark.sources.locks import (
     ConcurrentWriteError,
     dataset_write_lock,
 )
 from bigdatalab_spark.sources.skipping import _index_paths
 from bigdatalab_spark.sources.versioned import (
+    _CDF_DIR,
+    _INDEX_DIR,
+    _INDEX_RG_DIR,
     _MARKER,
-    _POINTER,
+    _PARTCOLS_FILE,
+    _RESERVED,
+    _SCHEMA_FILE,
+    _STREAM_BATCH,
+    _data_files,
+    _feed_plan,
+    _lineage,
+    _manifest_rows,
+    _next_version,
+    _op_of,
+    _own_version,
+    _parent_of,
+    _partition_values,
+    _publish,
+    _resolve_version,
+    _resolved_rows,
+    _sized,
+    _stored_schema,
     _version_dir,
+    _walk_data_files,
+    _write_manifest,
     latest_version,
     list_versions,
 )
 from bigdatalab_spark.sources.versioned import rollback as _rollback
 
-_INDEX_DIR = "_index"
-_INDEX_RG_DIR = "_index_rg"
-_MANIFEST_DIR = "_manifest"
-_CDF_DIR = "_cdf"
 _CHANGE_TYPE = "_change_type"
 _COMMIT_VERSION = "_commit_version"
-_STREAM_BATCH = "_STREAM_BATCH"
-_SCHEMA_FILE = "_SCHEMA"
-_RESERVED = "_RESERVED"
-_PARTCOLS_FILE = "_PARTITION_COLS"
-
-
-def _partition_values(rel: str) -> dict[str, str | None]:
-    """Partition-column values encoded in a relative file path's
-    directory segments (``k=3/tag=a/part-....parquet`` →
-    ``{"k": "3", "tag": "a"}``), URL-decoded the way Spark encodes
-    them; Hive's NULL sentinel decodes to None. Flat paths → {}."""
-    from urllib.parse import unquote
-
-    out: dict[str, str | None] = {}
-    for seg in rel.replace(os.sep, "/").split("/")[:-1]:
-        k, _, v = seg.partition("=")
-        v = unquote(v)
-        out[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else v
-    return out
 
 
 def _cast_partition_value(raw: str, like):
@@ -205,33 +198,6 @@ def _job_label(spark, desc: str):
 
 
 @contextlib.contextmanager
-def _delta_plan_scope(spark):
-    """Compile a DML plan's PERSISTED frames without AQE. Spark
-    compiles a cached plan's physical plan at ``persist()`` call time
-    (CacheManager.cacheQuery), so the session's AQE flag AT THAT MOMENT
-    decides how the cache later materializes: with AQE captured, every
-    Exchange inside the cached plan becomes its own stage-job on first
-    use (measured: the merge validate+bounds collect ran as 3 jobs and
-    the plan cache fill as 7 — the extra jobs are AQE stage
-    materializations of the cached joins/aggs). The frames persisted
-    here are delta-sized by the DML contract (the MERGE batch and the
-    touched files' rows), their joins are keyed on validated-unique
-    keys (no skew for AQE to split), and the static planner already
-    broadcasts below the threshold once cache statistics are exact —
-    AQE's only observable contribution was one fixed scheduling round
-    per exchange per commit, at any scale. Actions and the commit
-    writes keep their own AQE settings (the labeled metadata actions
-    run AQE-off regardless; the writes compile AQE-on after this scope
-    exits, so output coalescing is unchanged)."""
-    old = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old)
-
-
-@contextlib.contextmanager
 def _metadata_action(spark, desc: str):
     """Label + run a METADATA-SIZED single-row action (a global
     aggregation to one row) with AQE off for just this action. A
@@ -251,145 +217,8 @@ def _metadata_action(spark, desc: str):
     also plan without AQE — a perf-only, correctness-free blip; DML
     runs under the table write lock, so the window is one metadata
     aggregation wide."""
-    sc = spark.sparkContext
-    old_desc = sc.getLocalProperty("spark.job.description")
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    sc.setJobDescription(desc)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with _job_label(spark, desc), flat_plan_scope(spark):
         yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-        sc.setJobDescription(old_desc)
-
-
-def _walk_data_files(vdir: str) -> list[str]:
-    """Relative paths of a directory's parquet data files by LISTING
-    (walk, so partitioned layouts work); ``_index`` and other
-    _-prefixed entries are excluded the same way Spark's reader
-    excludes them. Used for the delta (freshly-written files, no
-    manifest yet) and as the legacy fallback — committed versions are
-    planned from their manifest instead."""
-    out = []
-    for dirpath, dirnames, filenames in os.walk(vdir):
-        dirnames[:] = [
-            d for d in dirnames if not d.startswith(("_", "."))
-        ]
-        for f in filenames:
-            if f.endswith(".parquet") and not f.startswith(("_", ".")):
-                out.append(
-                    os.path.relpath(os.path.join(dirpath, f), vdir)
-                )
-    return sorted(out)
-
-
-def _own_version(vdir: str) -> int:
-    return int(os.path.basename(vdir.rstrip("/"))[2:])
-
-
-def _manifest_rows(vdir: str) -> list[dict] | None:
-    """The version's committed ``_manifest`` as sorted dict rows
-    ``{"file", "size_bytes", "home"}``, or None for versions committed
-    before manifests existed (fall back to listing). ``home`` is the
-    version whose DIRECTORY physically stores the file — the data
-    plane's source of truth: hard-link commits self-home every row
-    (the file was linked into this very directory), reference commits
-    (``link_mode="reference"``) carry untouched files as rows pointing
-    at the file's ORIGINAL version directory, the object-store data
-    plane (no link syscall exists there). Manifests written before the
-    column existed are self-homed by construction. Read driver-side
-    with pyarrow — metadata-sized, no Spark job."""
-    import pyarrow.parquet as pq
-
-    d = os.path.join(vdir, _MANIFEST_DIR)
-    if not os.path.isdir(d):
-        return None
-    own = _own_version(vdir)
-    out: list[dict] = []
-    for part in sorted(os.listdir(d)):
-        if not part.endswith(".parquet"):
-            continue
-        t = pq.read_table(os.path.join(d, part))
-        files = t.column("file").to_pylist()
-        sizes = t.column("size_bytes").to_pylist()
-        homes = (
-            t.column("home").to_pylist()
-            if "home" in t.column_names
-            else [own] * len(files)
-        )
-        out.extend(
-            {"file": f, "size_bytes": s, "home": h if h is not None else own}
-            for f, s, h in zip(files, sizes, homes)
-        )
-    return sorted(out, key=lambda r: r["file"])
-
-
-def _manifest_entries(vdir: str) -> list[tuple[str, int]] | None:
-    """Compatibility view of :func:`_manifest_rows`: sorted
-    ``(relative file, size_bytes)`` tuples (tooling + tests)."""
-    rows = _manifest_rows(vdir)
-    if rows is None:
-        return None
-    return [(r["file"], r["size_bytes"]) for r in rows]
-
-
-def _write_manifest(vdir: str, rows: list[dict]) -> None:
-    """Land the version's file manifest BEFORE its marker (same commit
-    discipline as ``_index``): one row per data file with its size and
-    its HOME version (the directory that physically stores it). The
-    manifest — not a directory listing — is the planning source of
-    truth for every read/DML of a committed version, so planning cost
-    is one metadata-sized parquet read instead of an O(file-count)
-    filesystem walk, and works identically on object stores that have
-    no cheap recursive listing."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    rows = sorted(rows, key=lambda r: r["file"])
-    tbl = pa.table(
-        {
-            "file": [r["file"] for r in rows],
-            "size_bytes": [r["size_bytes"] for r in rows],
-            "home": [r["home"] for r in rows],
-        },
-        schema=pa.schema(
-            [
-                ("file", pa.string()),
-                ("size_bytes", pa.int64()),
-                ("home", pa.int64()),
-            ]
-        ),
-    )
-    d = os.path.join(vdir, _MANIFEST_DIR)
-    os.makedirs(d, exist_ok=True)
-    pq.write_table(tbl, os.path.join(d, "part-0.parquet"))
-
-
-def _sized(vdir: str, rels: list[str]) -> list[dict]:
-    """Stat the given files into self-homed manifest rows — called
-    only on the DELTA (files this commit wrote into ``vdir``), never
-    the whole snapshot."""
-    own = _own_version(vdir)
-    return [
-        {
-            "file": rel,
-            "size_bytes": os.path.getsize(os.path.join(vdir, rel)),
-            "home": own,
-        }
-        for rel in rels
-    ]
-
-
-def _data_files(vdir: str) -> list[str]:
-    """Relative paths of the snapshot's parquet data files: from the
-    committed ``_manifest`` when the version has one (metadata-sized
-    parquet read — the source of truth), else by walking (legacy
-    versions, and mid-commit directories whose manifest has not landed
-    yet — exactly the delta the commit is discovering)."""
-    m = _manifest_rows(vdir)
-    if m is not None:
-        return [r["file"] for r in m]
-    return _walk_data_files(vdir)
 
 
 def _env_int(name: str, default: int) -> int:
@@ -724,13 +553,11 @@ class ManagedTable:
             writer.parquet(vdir)
             files = _walk_data_files(vdir)
             self._write_index(vdir, new_files=files)
-            _write_manifest(vdir, _sized(vdir, files))
-            self._write_schema(vdir, df.schema)
-            self._write_partition_cols(vdir, tuple(partition_cols))
-            if stream_batch_id is not None:
-                self._write_stream_batch(vdir, stream_batch_id)
-            self._commit(version, vdir, expected=current, op="write")
-            return version
+            return self._land(
+                version, vdir, current, "write", df.schema,
+                tuple(partition_cols), files,
+                stream_batch_id=stream_batch_id,
+            )
 
     def append(self, df: DataFrame) -> int:
         """Append-as-new-version: the previous snapshot's data files are
@@ -755,10 +582,9 @@ class ManagedTable:
                 df.write.mode("errorifexists").parquet(vdir)
                 files = _walk_data_files(vdir)
                 self._write_index(vdir, new_files=files)
-                _write_manifest(vdir, _sized(vdir, files))
-                self._write_schema(vdir, df.schema)
-                self._commit(version, vdir, expected=current, op="write")
-                return version
+                return self._land(
+                    version, vdir, current, "write", df.schema, (), files
+                )
             prev = _version_dir(self.path, current)
             prev_files = _data_files(prev)
             new_schema = self._evolve_schema(current, df)
@@ -783,15 +609,10 @@ class ManagedTable:
                 new_files=sorted(new_files),
                 reuse_from=os.path.join(prev, _INDEX_DIR),
             )
-            # manifest composes from the PARENT's rows + the delta —
-            # no walk of the snapshot, no re-stat of carried files
-            _write_manifest(
-                vdir, carried + _sized(vdir, sorted(new_files))
+            return self._land(
+                version, vdir, current, "append", new_schema, pcols,
+                sorted(new_files), carried,
             )
-            self._write_schema(vdir, new_schema)
-            self._write_partition_cols(vdir, pcols)
-            self._commit(version, vdir, expected=current, op="append")
-            return version
 
     def compact(
         self,
@@ -865,11 +686,9 @@ class ManagedTable:
             writer.parquet(vdir)
             files = _walk_data_files(vdir)
             self._write_index(vdir, new_files=files)
-            _write_manifest(vdir, _sized(vdir, files))
-            self._write_schema(vdir, df.schema)
-            self._write_partition_cols(vdir, pcols)
-            self._commit(version, vdir, expected=current, op="compact")
-            return version
+            return self._land(
+                version, vdir, current, "compact", df.schema, pcols, files
+            )
 
     # ---- row-level DML (copy-on-write) -----------------------------------
 
@@ -1065,7 +884,7 @@ class ManagedTable:
         # failure (persists must not outlive a failed plan), the no-op
         # path unpersists before returning None, and the caller's
         # finally unpersists once the commit has landed.
-        with _delta_plan_scope(self.spark):
+        with flat_plan_scope(self.spark):
             source = source.select(*tgt_cols).persist()
             cached = [source]
             try:
@@ -1402,7 +1221,7 @@ class ManagedTable:
         # (plus the clustered write's range-sampling pass) — persist so
         # they are read from storage once, not once per action
         # (unpersisted by the caller once the commit has landed)
-        with _delta_plan_scope(self.spark):
+        with flat_plan_scope(self.spark):
             touched_df = self._read_files(
                 current, touched, cur_schema
             ).persist()
@@ -1573,21 +1392,11 @@ class ManagedTable:
             reuse_from=os.path.join(prev, _INDEX_DIR),
             reuse_files=set(link),
         )
-        # manifest = parent rows minus the rewritten files + the delta;
-        # planning the NEXT commit then never walks or re-stats the
-        # carried files (cost stays proportional to this commit's delta)
-        _write_manifest(
-            vdir, carried + _sized(vdir, sorted(written))
+        return self._land(
+            version, vdir, current, op,
+            self.stored_schema(current) or new_df.schema, pcols,
+            sorted(written), carried, stream_batch_id,
         )
-        schema = self.stored_schema(current)
-        if schema is None:
-            schema = new_df.schema
-        self._write_schema(vdir, schema)
-        self._write_partition_cols(vdir, pcols)
-        if stream_batch_id is not None:
-            self._write_stream_batch(vdir, stream_batch_id)
-        self._commit(version, vdir, expected=current, op=op)
-        return version
 
     @contextlib.contextmanager
     def _commit_section(self, what: str, timeout: float | None = None):
@@ -1637,7 +1446,7 @@ class ManagedTable:
           many files the snapshot carries (the object-store data
           plane; on S3-alikes a link does not exist and a copy is a
           full data transfer)."""
-        rows = self._rows_of(parent)
+        rows = _resolved_rows(self.path, parent)
         if keep is not None:
             keep_set = set(keep)
             rows = [r for r in rows if r["file"] in keep_set]
@@ -1765,13 +1574,13 @@ class ManagedTable:
             )
         rs = set(read_set)
         for v in chain[chain.index(base) + 1 :]:
-            parent = self._parent_of(v)
+            parent = _parent_of(self.path, v)
             removed, added = self._manifest_diff(parent, v)
             clash = removed & rs
             if clash:
                 raise CommitConflictError(
                     f"optimistic {op} on {self.path}: concurrent commit "
-                    f"v={v} (op={self._op_of(v)}) removed "
+                    f"v={v} (op={_op_of(self.path, v)}) removed "
                     f"{len(clash)} file(s) this transaction read "
                     f"(e.g. {sorted(clash)[0]}) — overlapping "
                     "transactions cannot both commit; recompute against "
@@ -1917,18 +1726,11 @@ class ManagedTable:
                     reuse_from=os.path.join(prev, _INDEX_DIR),
                     reuse_files=set(link),
                 )
-                _write_manifest(
-                    vdir, carried + _sized(vdir, sorted(written))
+                return self._land(
+                    version, vdir, current, op,
+                    self.stored_schema(current) or new_df.schema, pcols,
+                    sorted(written), carried, stream_batch_id,
                 )
-                schema = self.stored_schema(current)
-                if schema is None:
-                    schema = new_df.schema
-                self._write_schema(vdir, schema)
-                self._write_partition_cols(vdir, pcols)
-                if stream_batch_id is not None:
-                    self._write_stream_batch(vdir, stream_batch_id)
-                self._commit(version, vdir, expected=current, op=op)
-                return version
         except BaseException:
             shutil.rmtree(work, ignore_errors=True)
             raise
@@ -1954,10 +1756,9 @@ class ManagedTable:
                     df.write.mode("errorifexists").parquet(vdir)
                     files = _walk_data_files(vdir)
                     self._write_index(vdir, new_files=files)
-                    _write_manifest(vdir, _sized(vdir, files))
-                    self._write_schema(vdir, df.schema)
-                    self._commit(version, vdir, expected=None, op="write")
-                    return version
+                    return self._land(
+                        version, vdir, None, "write", df.schema, (), files
+                    )
         base = latest_version(self.path)
         self._guard_granularity_upgrade(base, "append")
         pcols = self.partition_cols_of(base)
@@ -1997,13 +1798,10 @@ class ManagedTable:
                     new_files=sorted(new_files),
                     reuse_from=os.path.join(prev, _INDEX_DIR),
                 )
-                _write_manifest(
-                    vdir, carried + _sized(vdir, sorted(new_files))
+                return self._land(
+                    version, vdir, current, "append", new_schema, pcols,
+                    sorted(new_files), carried,
                 )
-                self._write_schema(vdir, new_schema)
-                self._write_partition_cols(vdir, pcols)
-                self._commit(version, vdir, expected=current, op="append")
-                return version
         except BaseException:
             shutil.rmtree(work, ignore_errors=True)
             raise
@@ -2106,14 +1904,7 @@ class ManagedTable:
         snapshots committed before schema tracking existed (their file
         schemas are uniform by construction, so plain reads are
         correct)."""
-        from pyspark.sql.types import StructType
-
-        v = self._resolve(version)
-        p = os.path.join(_version_dir(self.path, v), _SCHEMA_FILE)
-        if not os.path.exists(p):
-            return None
-        with open(p, encoding="utf-8") as fh:
-            return StructType.fromJson(__import__("json").loads(fh.read()))
+        return _stored_schema(self.path, self._resolve(version))
 
     def _write_stream_batch(self, vdir: str, batch_id: int) -> None:
         """Record the streaming micro-batch that produced this version,
@@ -2144,25 +1935,6 @@ class ManagedTable:
                 with open(p, encoding="utf-8") as fh:
                     return int(fh.read().strip())
         return None
-
-    def _rows_of(self, version: int) -> list[dict]:
-        """The version's manifest rows with an ``abs`` key resolved
-        through each row's HOME version directory — the one place the
-        logical file set becomes physical paths. Legacy versions
-        without a manifest are self-homed by construction (every file
-        was written or linked into their own directory)."""
-        vdir = _version_dir(self.path, version)
-        rows = _manifest_rows(vdir)
-        if rows is None:
-            rows = [
-                {"file": f, "size_bytes": None, "home": version}
-                for f in _walk_data_files(vdir)
-            ]
-        for r in rows:
-            r["abs"] = os.path.join(
-                _version_dir(self.path, r["home"]), r["file"]
-            )
-        return rows
 
     def _read_rows(
         self, rows: list[dict], schema, with_path: bool = False
@@ -2237,7 +2009,7 @@ class ManagedTable:
         mapping = self.spark.createDataFrame(
             [
                 ("/" + os.path.abspath(r["abs"]).lstrip("/"), r["file"])
-                for r in self._rows_of(version)
+                for r in _resolved_rows(self.path, version)
                 if r["file"] in want
             ],
             "__norm string, __file string",
@@ -2274,7 +2046,9 @@ class ManagedTable:
                 out = out.withColumn("__path", F.lit(None).cast("string"))
             return out
         want = set(files)
-        rows = [r for r in self._rows_of(version) if r["file"] in want]
+        rows = [
+            r for r in _resolved_rows(self.path, version) if r["file"] in want
+        ]
         missing = want - {r["file"] for r in rows}
         if missing:
             raise FileNotFoundError(
@@ -2295,65 +2069,24 @@ class ManagedTable:
         preserved, so new files identify the new rows); the first
         snapshot is all-inserts; compaction is a logical no-op (empty
         feed). A later full ``write()`` raises — a whole-snapshot
-        replace has no row-level derivation."""
+        replace has no row-level derivation. The per-version decision
+        is ``versioned._feed_plan``, shared with the ``managed_changes``
+        source; this method only reads the planned files with Spark."""
         v = self._resolve(version)
-        vdir = _version_dir(self.path, v)
-        cdf_dir = os.path.join(vdir, _CDF_DIR)
-        if os.path.isdir(cdf_dir):
+        change_type, rows = _feed_plan(self.path, v)
+        if change_type is None:
             # the commit version is stamped from the DIRECTORY, the one
             # authority: optimistic commits write their feed before
             # their number exists (exclusive commits store the same
             # value; withColumn replaces it identically)
-            return self.spark.read.parquet(cdf_dir).withColumn(
-                _COMMIT_VERSION, F.lit(v)
+            feed = self.spark.read.parquet(
+                os.path.join(_version_dir(self.path, v), _CDF_DIR)
             )
-        op = self._op_of(v)
-        committed = self.versions()
-        # a TRUE initial snapshot (no recorded parent) bootstraps as
-        # all-inserts; gating on "first remaining committed version"
-        # would let a full replace whose ancestors were vacuumed
-        # masquerade as a bootstrap and silently drop its implicit
-        # deletes — _plan_partitions makes the same parent-based call
-        if self._parent_of(v) is None and op in ("write", ""):
-            return (
-                self.read(v)
-                .withColumn(_CHANGE_TYPE, F.lit("insert"))
-                .withColumn(_COMMIT_VERSION, F.lit(v))
-            )
-        if op == "compact":
-            return (
-                self.read(v)
-                .filter(F.lit(False))
-                .withColumn(_CHANGE_TYPE, F.lit("insert"))
-                .withColumn(_COMMIT_VERSION, F.lit(v))
-            )
-        if op == "append":
-            # diff against the RECORDED parent, not the numerically
-            # previous version — after a rollback the previous number
-            # is an orphaned branch and would mis-derive the inserts
-            parent = self._parent_of(v)
-            if parent is None or parent not in committed:
-                raise FileNotFoundError(
-                    f"cannot derive changes for append v={v}: its "
-                    "parent snapshot was vacuumed"
-                )
-            prev_files = set(
-                _data_files(_version_dir(self.path, parent))
-            )
-            fresh = [
-                rel
-                for rel in _data_files(vdir)
-                if rel not in prev_files
-            ]
-            return (
-                self._read_files(v, fresh, self.stored_schema(v))
-                .withColumn(_CHANGE_TYPE, F.lit("insert"))
-                .withColumn(_COMMIT_VERSION, F.lit(v))
-            )
-        raise ValueError(
-            f"no change feed for v={v} (op={op or 'unknown'}): a full "
-            "snapshot replace has no row-level change derivation"
-        )
+        else:
+            feed = self._read_files(
+                v, [r["file"] for r in rows], self.stored_schema(v)
+            ).withColumn(_CHANGE_TYPE, F.lit(change_type))
+        return feed.withColumn(_COMMIT_VERSION, F.lit(v))
 
     def read(self, version: int | None = None) -> DataFrame:
         """Time-travel read: the pointer's target by default. When the
@@ -2363,7 +2096,7 @@ class ManagedTable:
         v = self._resolve(version)
         vdir = _version_dir(self.path, v)
         schema = self.stored_schema(v)
-        rows = self._rows_of(v)
+        rows = _resolved_rows(self.path, v)
         if rows and any(r["home"] != v for r in rows):
             # reference data plane: some files live in other version
             # directories — resolve every path through the manifest
@@ -2520,8 +2253,8 @@ class ManagedTable:
             rows.append(
                 (
                     v,
-                    self._op_of(v) or None,
-                    self._parent_of(v),
+                    _op_of(self.path, v) or None,
+                    _parent_of(self.path, v),
                     len(files),
                     n_bytes,
                     batch,
@@ -2569,7 +2302,7 @@ class ManagedTable:
             # the clone's rows are SELF-homed: a manifest home can
             # only point inside its own table root, and the links put
             # every file physically in the clone's v=1
-            src_rows = self._rows_of(v)
+            src_rows = _resolved_rows(self.path, v)
             for r in src_rows:
                 target = os.path.join(vdir, r["file"])
                 os.makedirs(os.path.dirname(target), exist_ok=True)
@@ -2713,7 +2446,7 @@ class ManagedTable:
         v = self._resolve(version)
         vdir = _version_dir(self.path, v)
         schema = self.stored_schema(v)
-        rows = self._rows_of(v)
+        rows = _resolved_rows(self.path, v)
         pcols = self.partition_cols_of(v)
         part_preds = [p for p in preds if p[0] in pcols]
         data_preds = [p for p in preds if p[0] not in pcols]
@@ -2788,26 +2521,10 @@ class ManagedTable:
     # ---- internals ---------------------------------------------------------
 
     def _resolve(self, version: int | None) -> int:
-        if version is None:
-            version = latest_version(self.path)
-            if version is None:
-                raise FileNotFoundError(
-                    f"no committed versions under {self.path}"
-                )
-        if version not in list_versions(self.path):
-            raise FileNotFoundError(
-                f"version {version} not committed under {self.path}"
-            )
-        return version
+        return _resolve_version(self.path, version)
 
     def _allocate(self) -> tuple[int, str]:
-        os.makedirs(self.path, exist_ok=True)
-        existing = [
-            int(e[2:])
-            for e in os.listdir(self.path)
-            if e.startswith("v=")
-        ]  # incl. crashed marker-less dirs: never reuse their numbers
-        version = max(existing, default=0) + 1
+        version = _next_version(self.path)
         return version, _version_dir(self.path, version)
 
     def _write_index(
@@ -3002,6 +2719,31 @@ class ManagedTable:
         os.makedirs(d, exist_ok=False)
         pq.write_table(out, os.path.join(d, "part-0.parquet"))
 
+    def _land(
+        self,
+        version: int,
+        vdir: str,
+        expected: int | None,
+        op: str,
+        schema,
+        pcols: tuple[str, ...],
+        new_files: list[str],
+        carried: list[dict] = (),
+        stream_batch_id: int | None = None,
+    ) -> int:
+        """Commit a version whose data files and index are on disk:
+        land its manifest — the carried rows plus the stat'ed delta
+        ``new_files``, so no commit walks or re-stats the carried
+        files — schema, partition columns and stream batch id, then
+        the marker and the pointer. Returns ``version``."""
+        _write_manifest(vdir, list(carried) + _sized(vdir, new_files))
+        self._write_schema(vdir, schema)
+        self._write_partition_cols(vdir, pcols)
+        if stream_batch_id is not None:
+            self._write_stream_batch(vdir, stream_batch_id)
+        self._commit(version, vdir, expected=expected, op=op)
+        return version
+
     def _commit(
         self, version: int, vdir: str, expected: int | None, op: str = ""
     ) -> None:
@@ -3023,38 +2765,7 @@ class ManagedTable:
                 "mid-write — a concurrent writer bypassed the writer "
                 "lock; this snapshot is aborted (uncommitted)."
             )
-        with open(os.path.join(vdir, _MARKER), "w", encoding="utf-8") as fh:
-            fh.write(op)
-            if expected is not None:
-                fh.write(f"\nparent={expected}")
-        tmp = os.path.join(self.path, f"{_POINTER}.tmp")
-        with open(tmp, "w", encoding="utf-8") as fh:
-            fh.write(str(version))
-        os.replace(tmp, os.path.join(self.path, _POINTER))
-
-    def _marker_lines(self, version: int) -> list[str]:
-        marker = os.path.join(
-            _version_dir(self.path, version), _MARKER
-        )
-        with open(marker, encoding="utf-8") as fh:
-            return fh.read().strip().splitlines()
-
-    def _op_of(self, version: int) -> str:
-        """Operation kind recorded in a committed version's marker
-        ("" for snapshots committed before op recording existed)."""
-        lines = self._marker_lines(version)
-        return lines[0].strip() if lines else ""
-
-    def _parent_of(self, version: int) -> int | None:
-        """The version this commit was computed against (None for an
-        initial snapshot). Markers from before parent recording fall
-        back to the previous committed version — correct for every
-        linear history, which is all that could exist then."""
-        for line in self._marker_lines(version)[1:]:
-            if line.startswith("parent="):
-                return int(line.split("=", 1)[1])
-        prior = [c for c in self.versions() if c < version]
-        return prior[-1] if prior else None
+        _publish(self.path, version, op=op, parent=expected)
 
     def lineage(self, version: int | None = None) -> list[int]:
         """The pointer lineage ending at ``version`` (default: the
@@ -3062,18 +2773,7 @@ class ManagedTable:
         whose change feeds compose into this history. Orphaned
         branches left behind by a rollback are committed and
         time-travelable but are NOT part of this list."""
-        v = self._resolve(version)
-        chain = [v]
-        committed = set(self.versions())
-        while True:
-            parent = self._parent_of(chain[-1])
-            if parent is None:
-                break
-            if parent not in committed:
-                break  # vacuumed ancestry: chain ends here, loudness
-                # is the range-readers' job (they know their bounds)
-            chain.append(parent)
-        return list(reversed(chain))
+        return _lineage(self.path, self._resolve(version))
 
 
 class ChangeFeedCursor:
@@ -3133,7 +2833,7 @@ class ChangeFeedCursor:
             # a position stranded on a rollback-orphaned branch means
             # the consumer applied changes this history never had, and
             # silently resuming would leave them uncompensated
-            if self.table._parent_of(todo[0]) != pos:
+            if _parent_of(self.table.path, todo[0]) != pos:
                 raise ValueError(
                     f"cursor position v={pos} is not on the current "
                     "pointer lineage (a rollback orphaned it) — the "

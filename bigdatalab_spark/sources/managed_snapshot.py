@@ -75,18 +75,20 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
 )
 
-from bigdatalab_spark.sources.managed import _cast_partition_value
-from bigdatalab_spark.sources.managed_stream import (
-    _constants_of,
-    _files_of,
-    _latest,
-    _manifest_homes,
-    _stored_schema_json,
-    _vdir,
-    _versions,
+from bigdatalab_spark.sources.managed import (
+    _cast_partition_value,
+    _read_index_table,
 )
-
-_INDEX_DIR = "_index"
+from bigdatalab_spark.sources.managed_stream import _required_schema
+from bigdatalab_spark.sources.versioned import (
+    _INDEX_DIR,
+    _data_files,
+    _partition_values,
+    _resolved_rows,
+    _version_dir,
+    latest_version,
+    list_versions,
+)
 
 
 class _FilePartition(InputPartition):
@@ -132,33 +134,17 @@ def _fold_bounds(filters: list[Filter]) -> dict[str, tuple]:
     return bounds
 
 
-def _index_rows(vdir: str) -> list[dict] | None:
-    """The snapshot's committed file-level index as plain dicts
-    (driver-side pyarrow read), or None when the table was built
-    without index columns."""
-    import pyarrow.parquet as pq
-
-    d = os.path.join(vdir, _INDEX_DIR)
-    if not os.path.isdir(d):
-        return None
-    rows: list[dict] = []
-    for part in sorted(os.listdir(d)):
-        if part.endswith(".parquet"):
-            rows.extend(pq.read_table(os.path.join(d, part)).to_pylist())
-    return rows
-
-
 def _prune(vdir: str, files: list[str], bounds: dict[str, tuple]) -> list[str]:
     """Index-pruned file subset: a file is dropped only when, for some
     bounded column, its recorded stats PROVE no row can satisfy the
     bounds (max < lo or min > hi). NULL stats and files absent from
     the index stay candidates — same soundness argument as
     ManagedTable.candidate_files."""
-    idx = _index_rows(vdir)
+    idx = _read_index_table(os.path.join(vdir, _INDEX_DIR))
     if idx is None or not bounds:
         return files
     by_col: dict[str, dict[str, dict]] = {}
-    for r in idx:
+    for r in idx.to_pylist():
         by_col.setdefault(r["col"], {})[r["file"]] = r
     keep = []
     for rel in files:
@@ -181,24 +167,30 @@ def _prune(vdir: str, files: list[str], bounds: dict[str, tuple]) -> list[str]:
     return keep
 
 
+def _pinned_version(path: str | None, options) -> int:
+    """The ``versionAsOf`` option (default: the pointer), refused
+    unless committed."""
+    if not path:
+        raise ValueError("managed requires .load(table_path)")
+    committed = list_versions(path)
+    if not committed:
+        raise ValueError(f"no committed versions under {path}")
+    v = options.get("versionasof")
+    version = int(v) if v is not None else latest_version(path)
+    if version not in committed:
+        raise ValueError(
+            f"managed: version {version} of {path} is not "
+            "committed (vacuumed, rolled-back debris, or never "
+            "existed) — pick one of the committed versions"
+        )
+    return version
+
+
 class ManagedSnapshotReader(DataSourceReader):
     def __init__(self, options: dict, schema) -> None:
-        path = options.get("path")
-        if not path:
-            raise ValueError("managed requires .load(table_path)")
-        self.path = path
+        self.path = options.get("path")
+        self.version = _pinned_version(self.path, options)
         self.schema = schema
-        committed = _versions(path)
-        if not committed:
-            raise ValueError(f"no committed versions under {path}")
-        v = options.get("versionasof")
-        self.version = int(v) if v is not None else _latest(path)
-        if self.version not in committed:
-            raise ValueError(
-                f"managed: version {self.version} of {path} is not "
-                "committed (vacuumed, rolled-back debris, or never "
-                "existed) — pick one of the committed versions"
-            )
         self.bounds: dict[str, tuple] = {}
         self.pruning = str(options.get("pruning", "on")).lower() != "off"
 
@@ -217,12 +209,12 @@ class ManagedSnapshotReader(DataSourceReader):
         in tests and tooling): partition pruning (exact — the value is
         in the directory name) composed with index pruning (stats
         bounds)."""
-        vdir = _vdir(self.path, self.version)
-        files = _files_of(vdir)
+        vdir = _version_dir(self.path, self.version)
+        files = _data_files(vdir)
         if self.bounds:
             kept = []
             for rel in files:
-                consts = _constants_of(rel) or {}
+                consts = _partition_values(rel)
                 drop = False
                 for col, (lo, hi) in self.bounds.items():
                     raw = consts.get(col)
@@ -248,15 +240,10 @@ class ManagedSnapshotReader(DataSourceReader):
     def partitions(self) -> list[InputPartition]:
         # resolve each kept file through its manifest HOME (reference
         # data plane: carried files live in older version directories)
-        vdir = _vdir(self.path, self.version)
-        homes = _manifest_homes(vdir)
+        rows = _resolved_rows(self.path, self.version)
+        abs_of = {r["file"]: r["abs"] for r in rows}
         out = [
-            _FilePartition(
-                os.path.join(
-                    _vdir(self.path, homes.get(rel, self.version)), rel
-                ),
-                constants=_constants_of(rel),
-            )
+            _FilePartition(abs_of[rel], constants=_partition_values(rel))
             for rel in self.pruned_files()
         ]
         if not out:
@@ -323,25 +310,13 @@ class ManagedSnapshotDataSource(DataSource):
         from pyspark.sql.types import StructType
 
         path = self.options.get("path")
-        if not path:
-            raise ValueError("managed requires .load(table_path)")
-        committed = _versions(path)
-        if not committed:
-            raise ValueError(f"no committed versions under {path}")
-        v = self.options.get("versionasof")
-        version = int(v) if v is not None else _latest(path)
-        if version not in committed:
-            raise ValueError(
-                f"managed: version {version} of {path} is not "
-                "committed (vacuumed, rolled-back debris, or never "
-                "existed) — pick one of the committed versions"
-            )
+        version = _pinned_version(path, self.options)
         # pin the resolution: an unpinned read must resolve the
         # pointer ONCE — a commit landing between schema() and
         # reader() would otherwise serve the newer version's files
         # under this older version's stored schema
         self.options["versionasof"] = str(version)
-        full = StructType.fromJson(_stored_schema_json(path, version))
+        full = _required_schema(path, version)
         cols = self.options.get("columns")
         if not cols:
             return full

@@ -24,6 +24,12 @@ argument as the fixed-width tail source). Vacuumed history and full
 ``write()`` replaces inside a requested range fail LOUDLY instead of
 silently skipping changes.
 
+Planning reads the catalog only through sources/versioned.py (which
+states the layout): the lineage walk, version listing and pointer,
+and the per-version feed decision :func:`versioned._feed_plan` shared
+with ``ManagedTable.changes`` — this module adds the range contract
+and the Arrow data plane.
+
 Scale/role: one InputPartition per (version, parquet file), so a
 backlog of many versions drains with file-granular executor
 parallelism; each task reads its parquet file with pyarrow and ships
@@ -35,8 +41,6 @@ table's stored schema at plan time).
 
 from __future__ import annotations
 
-import json
-import os
 from collections.abc import Iterator
 
 from pyspark.sql.datasource import (
@@ -46,162 +50,29 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-_CDF_DIR = "_cdf"
-_SCHEMA_FILE = "_SCHEMA"
-_MARKER = "_COMMITTED"
-_POINTER = "_latest"
+from bigdatalab_spark.sources.versioned import (
+    _SCHEMA_FILE,
+    _feed_plan,
+    _lineage,
+    _parent_of,
+    _partition_values,
+    _stored_schema,
+    latest_version,
+    list_versions,
+)
 
 
-# ---- driver-side catalog helpers (plain filesystem, no Spark) -----------
-
-
-def _vdir(path: str, v: int) -> str:
-    return os.path.join(path, f"v={v}")
-
-
-def _versions(path: str) -> list[int]:
-    try:
-        entries = os.listdir(path)
-    except FileNotFoundError:
-        return []
-    return sorted(
-        int(e[2:])
-        for e in entries
-        if e.startswith("v=")
-        and os.path.exists(os.path.join(path, e, _MARKER))
-    )
-
-
-def _latest(path: str) -> int | None:
-    try:
-        with open(os.path.join(path, _POINTER), encoding="utf-8") as fh:
-            return int(fh.read().strip())
-    except FileNotFoundError:
-        return None
-
-
-def _marker_lines(path: str, v: int) -> list[str]:
-    with open(os.path.join(_vdir(path, v), _MARKER), encoding="utf-8") as fh:
-        return fh.read().strip().splitlines()
-
-
-def _op_of(path: str, v: int) -> str:
-    lines = _marker_lines(path, v)
-    return lines[0].strip() if lines else ""
-
-
-def _parent_of(path: str, v: int) -> int | None:
-    """Recorded parent version (None for initial snapshots; legacy
-    markers fall back to the previous committed version — correct for
-    the only histories that could exist then: linear ones)."""
-    for line in _marker_lines(path, v)[1:]:
-        if line.startswith("parent="):
-            return int(line.split("=", 1)[1])
-    prior = [c for c in _versions(path) if c < v]
-    return prior[-1] if prior else None
-
-
-def _lineage(path: str, hi: int) -> list[int]:
-    """Pointer lineage ending at hi, oldest first (stops at a vacuumed
-    ancestor; gap loudness is the planner's job)."""
-    committed = set(_versions(path))
-    chain = [hi]
-    while True:
-        p = _parent_of(path, chain[-1])
-        if p is None or p not in committed:
-            break
-        chain.append(p)
-    return list(reversed(chain))
-
-
-def _manifest_files(vdir: str) -> list[str] | None:
-    """Relative data-file names from the version's committed
-    ``_manifest`` (the planning source of truth — one metadata-sized
-    parquet read, no directory listing), or None for versions
-    committed before manifests existed."""
-    import pyarrow.parquet as pq
-
-    mdir = os.path.join(vdir, "_manifest")
-    if not os.path.isdir(mdir):
-        return None
-    names: list[str] = []
-    for part in sorted(os.listdir(mdir)):
-        if part.endswith(".parquet"):
-            names.extend(
-                pq.read_table(os.path.join(mdir, part))
-                .column("file")
-                .to_pylist()
-            )
-    return sorted(names)
-
-
-def _manifest_homes(vdir: str) -> dict[str, int]:
-    """rel file → HOME version (the directory physically storing it).
-    Versions without a manifest, or manifests predating the ``home``
-    column, are self-homed by construction. Driver-side pyarrow —
-    metadata-sized."""
-    import pyarrow.parquet as pq
-
-    own = int(os.path.basename(vdir.rstrip("/"))[2:])
-    mdir = os.path.join(vdir, "_manifest")
-    out: dict[str, int] = {}
-    if not os.path.isdir(mdir):
-        return {f: own for f in _files_of(vdir)}
-    for part in sorted(os.listdir(mdir)):
-        if not part.endswith(".parquet"):
-            continue
-        t = pq.read_table(os.path.join(mdir, part))
-        files = t.column("file").to_pylist()
-        homes = (
-            t.column("home").to_pylist()
-            if "home" in t.column_names
-            else [own] * len(files)
-        )
-        out.update(
-            (f, h if h is not None else own)
-            for f, h in zip(files, homes)
-        )
-    return out
-
-
-def _files_of(vdir: str) -> list[str]:
-    names = _manifest_files(vdir)
-    if names is not None:
-        return names
-    out = []
-    for dirpath, dirnames, filenames in os.walk(vdir):
-        dirnames[:] = [
-            d for d in dirnames if not d.startswith(("_", "."))
-        ]
-        out.extend(
-            os.path.relpath(os.path.join(dirpath, f), vdir)
-            for f in filenames
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
-    return sorted(out)
-
-
-def _constants_of(rel: str) -> dict[str, str | None] | None:
-    """Partition-column values to STAMP when reading a partitioned
-    snapshot's file directly (the physical file omits them; the
-    directory name carries them), or None for flat paths."""
-    from bigdatalab_spark.sources.managed import _partition_values
-
-    if os.sep not in rel and "/" not in rel:
-        return None
-    return _partition_values(rel)
-
-
-def _stored_schema_json(path: str, v: int) -> dict:
-    p = os.path.join(_vdir(path, v), _SCHEMA_FILE)
-    if not os.path.exists(p):
+def _required_schema(path: str, v: int):
+    """Version ``v``'s stored schema; the connectors refuse tables
+    committed before schema tracking existed."""
+    schema = _stored_schema(path, v)
+    if schema is None:
         raise ValueError(
             "managed_changes requires a table with stored schemas "
             f"(no {_SCHEMA_FILE} in v={v} — commit once with the "
             "current engine to upgrade)"
         )
-    with open(p, encoding="utf-8") as fh:
-        return json.loads(fh.read())
+    return schema
 
 
 class _ChangePartition(InputPartition):
@@ -232,10 +103,10 @@ def _plan_partitions(
     shared planner of the batch and streaming readers. The walk
     follows each commit's recorded parent, so versions orphaned by a
     rollback (committed, time-travelable, but not this history) are
-    correctly excluded, and an append's inserts are diffed against
-    its RECORDED parent, never the numerically previous version.
+    correctly excluded; each version's feed comes from
+    ``versioned._feed_plan``, the decision ManagedTable.changes makes.
     Raises on vacuumed/off-lineage history and on non-initial full
-    replaces (same contract as ManagedTable.changes).
+    replaces.
 
     ``start_version`` is the USER-REQUESTED first version (the reader's
     startingVersion): when the first planned version IS that request,
@@ -248,7 +119,7 @@ def _plan_partitions(
     still refuses."""
     if hi <= lo:
         return []
-    if hi not in _versions(path):
+    if hi not in list_versions(path):
         raise ValueError(
             f"managed_changes: version {hi} of {path} is gone "
             "(vacuumed or never committed) — re-bootstrap from a "
@@ -270,49 +141,21 @@ def _plan_partitions(
         )
     out: list[_ChangePartition] = []
     for v in vers:
-        vdir = _vdir(path, v)
-        cdf = os.path.join(vdir, _CDF_DIR)
-        if os.path.isdir(cdf):
-            out.extend(
-                _ChangePartition(os.path.join(cdf, f), v, None)
-                for f in _files_of(cdf)
+        try:
+            change_type, rows = _feed_plan(path, v)
+        except ValueError as exc:
+            raise ValueError(f"managed_changes: {exc}") from None
+        out.extend(
+            _ChangePartition(
+                r["abs"],
+                v,
+                change_type,
+                # a _cdf store's files carry their columns; snapshot
+                # files carry partition values in their directory names
+                constants=_partition_values(r["file"]) if change_type else None,
             )
-            continue
-        op = _op_of(path, v)
-        homes = _manifest_homes(vdir)
-        if _parent_of(path, v) is None and op in ("write", ""):
-            out.extend(
-                _ChangePartition(
-                    os.path.join(_vdir(path, homes.get(f, v)), f),
-                    v,
-                    "insert",
-                    constants=_constants_of(f),
-                )
-                for f in _files_of(vdir)
-            )
-        elif op == "append":
-            parent = _parent_of(path, v)
-            prev_files = set(_files_of(_vdir(path, parent)))
-            # files NEW to the snapshot are physically homed in v
-            # itself under both data planes
-            out.extend(
-                _ChangePartition(
-                    os.path.join(vdir, f),
-                    v,
-                    "insert",
-                    constants=_constants_of(f),
-                )
-                for f in _files_of(vdir)
-                if f not in prev_files
-            )
-        elif op == "compact":
-            continue  # physical-layout no-op: empty feed
-        else:
-            raise ValueError(
-                f"managed_changes: no change feed for v={v} "
-                f"(op={op or 'unknown'}) — a full snapshot replace has "
-                "no row-level change derivation"
-            )
+            for r in rows
+        )
     return out
 
 
@@ -384,10 +227,10 @@ def _feed_schema(path: str):
         StructType,
     )
 
-    latest = _latest(path)
+    latest = latest_version(path)
     if latest is None:
         raise ValueError(f"no committed versions under {path}")
-    data = StructType.fromJson(_stored_schema_json(path, latest))
+    data = _required_schema(path, latest)
     return StructType(
         list(data.fields)
         + [
@@ -406,11 +249,11 @@ class ManagedChangesReader(DataSourceReader):
             raise ValueError("managed_changes requires .load(table_path)")
         self.path = path
         self.schema = schema
-        committed = _versions(path)
+        committed = list_versions(path)
         if not committed:
             raise ValueError(f"no committed versions under {path}")
         self.lo = int(options.get("startingversion", committed[0]))
-        self.hi = int(options.get("endingversion", _latest(path)))
+        self.hi = int(options.get("endingversion", latest_version(path)))
         if self.lo > self.hi:
             # an explicit start beyond the range's end would plan zero
             # partitions and return an empty feed — silent data "loss"
@@ -447,7 +290,7 @@ class ManagedChangesStreamReader(DataSourceStreamReader):
             raise ValueError("managed_changes requires .load(table_path)")
         self.path = path
         self.schema = schema
-        committed = _versions(path)
+        committed = list_versions(path)
         if not committed:
             raise ValueError(f"no committed versions under {path}")
         self.start = int(options.get("startingversion", committed[0]))
@@ -456,7 +299,7 @@ class ManagedChangesStreamReader(DataSourceStreamReader):
         return {"v": self.start - 1}
 
     def latestOffset(self) -> dict:
-        latest = _latest(self.path)
+        latest = latest_version(self.path)
         return {"v": latest if latest is not None else self.start - 1}
 
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:

@@ -1,27 +1,60 @@
-"""Versioned datasets on plain parquet: time travel, rollback, vacuum.
+"""Versioned datasets on plain parquet: time travel, rollback, vacuum —
+and the ONE owner of the on-disk catalog format.
 
 The table-format trio (Delta/Iceberg/Hudi) builds on one primitive:
 writers create IMMUTABLE snapshots and readers follow a pointer — so
 reads are repeatable (train/eval reproducibility), a bad load is
 undone by moving the pointer, and storage is reclaimed explicitly.
-This module rebuilds that primitive on a directory layout:
+This module rebuilds that primitive on a directory layout and owns
+its format: every other module (the ManagedTable facade in
+managed.py, the ``managed_changes`` and ``managed`` data sources)
+takes the layout's names, and the marker, pointer, lineage, manifest,
+stored-schema and change-feed logic, from here:
 
-    path/v=1/...parquet + _COMMITTED      (immutable snapshot)
-    path/v=2/...parquet + _COMMITTED
-    path/_latest                          (pointer file: "2")
+    path/_latest                 pointer file: the current version ("2")
+    path/v=N/                    one immutable snapshot per version
+      *.parquet, col=val/...     data files (Hive-style partition dirs)
+      _COMMITTED                 marker; line 1 = op kind (write/append/
+                                 compact/delete/update/merge, "" for
+                                 plain snapshots), line 2 = "parent=P"
+                                 (the version the commit was computed
+                                 against; absent for initial snapshots
+                                 and legacy markers)
+      _manifest/*.parquet        one row per data file: file (relative
+                                 name), size_bytes, home (the version
+                                 directory physically storing it —
+                                 older versions under the reference
+                                 data plane)
+      _SCHEMA                    the logical schema (StructType JSON)
+      _PARTITION_COLS            partition columns (JSON list)
+      _STREAM_BATCH              the micro-batch id that produced it
+      _index/, _index_rg/        per-file / per-row-group skipping stats
+      _cdf/                      recorded change rows of a DML version
+      _HOMEONLY                  tombstone replacing _COMMITTED on a
+                                 vacuumed directory that still homes
+                                 referenced files
+    path/_txn_<id>/, .txn_setup_<id>/  optimistic-writer staging
+                                 (stamped with _RESERVED)
+
+The plain :func:`write_version` / :func:`merge_into_versioned`
+snapshots carry only data files and an empty marker; the managed
+facade adds the rest. Every ``_``-prefixed entry is invisible to
+Spark's parquet reader, so ``spark.read.parquet(path/v=N)`` of a
+committed self-homed version is always correct.
 
 Commit protocol: a snapshot directory is INVISIBLE until its
 ``_COMMITTED`` marker lands, and the pointer file is replaced
-atomically (write-temp + rename) — a crash mid-write leaves a
-marker-less directory that every reader and the next writer ignore,
-and a crash before the pointer flip leaves ``_latest`` on the old
-snapshot. Same failure story as the engine's crash-safe compaction.
+atomically (write-temp + rename, :func:`_flip_pointer` — the one
+writer of ``_latest``) — a crash mid-write leaves a marker-less
+directory that every reader and the next writer ignore, and a crash
+before the pointer flip leaves ``_latest`` on the old snapshot. Same
+failure story as the engine's crash-safe compaction.
 
-Scale note: snapshots share nothing (full copies), which is the right
-tradeoff for curated training-set releases (tens of versions of
-terabyte datasets, each immutable); incremental storage sharing is
-what the real table formats add on top via file-level manifests —
-out of scope here, the SEMANTICS are what the engine contracts.
+Change feed: :func:`_feed_plan` decides, per version, where its
+row-level changes come from (recorded ``_cdf`` store, all-inserts
+initial snapshot, inserts derived from an append's new files against
+its RECORDED parent, empty compaction) or raises — the one decision
+shared by ``ManagedTable.changes`` and the ``managed_changes`` source.
 """
 
 from __future__ import annotations
@@ -43,6 +76,15 @@ _MARKER = "_COMMITTED"
 #: a committed version (invisible to list_versions / rollback / time
 #: travel); it is physical storage awaiting its last reference.
 _HOMEONLY = "_HOMEONLY"
+#: liveness stamp (pid + host) of an optimistic writer's staging dir
+_RESERVED = "_RESERVED"
+_MANIFEST_DIR = "_manifest"
+_SCHEMA_FILE = "_SCHEMA"
+_PARTCOLS_FILE = "_PARTITION_COLS"
+_STREAM_BATCH = "_STREAM_BATCH"
+_INDEX_DIR = "_index"
+_INDEX_RG_DIR = "_index_rg"
+_CDF_DIR = "_cdf"
 #: grace period before vacuum treats a STAMPLESS ``.txn_setup_``
 #: scratch dir as crash debris: a live optimistic writer is between
 #: mkdir and its ``_RESERVED`` stamp write for microseconds — any
@@ -52,6 +94,10 @@ _SETUP_GRACE_S = 60.0
 
 def _version_dir(path: str, version: int) -> str:
     return os.path.join(path, f"v={version}")
+
+
+def _own_version(vdir: str) -> int:
+    return int(os.path.basename(vdir.rstrip("/"))[2:])
 
 
 def list_versions(path: str) -> list[int]:
@@ -79,6 +125,319 @@ def latest_version(path: str) -> int | None:
         return None
 
 
+def _resolve_version(path: str, version: int | None) -> int:
+    """``version`` (default: the pointer's target) if it is committed,
+    else FileNotFoundError."""
+    if version is None:
+        version = latest_version(path)
+        if version is None:
+            raise FileNotFoundError(f"no committed versions under {path}")
+    if version not in list_versions(path):
+        raise FileNotFoundError(f"version {version} not committed under {path}")
+    return version
+
+
+def _next_version(path: str) -> int:
+    """The next unused version number — counting crashed marker-less
+    directories too, so their numbers are never reused."""
+    os.makedirs(path, exist_ok=True)
+    existing = [int(e[2:]) for e in os.listdir(path) if e.startswith("v=")]
+    return max(existing, default=0) + 1
+
+
+def _flip_pointer(path: str, version: int) -> None:
+    """Atomically point ``_latest`` at ``version`` (write-temp +
+    rename: a crash leaves the old pointer, never a torn file)."""
+    tmp = os.path.join(path, f"{_POINTER}.tmp")
+    with open(tmp, "w", encoding="utf-8") as fh:
+        fh.write(str(version))
+    os.replace(tmp, os.path.join(path, _POINTER))
+
+
+def _publish(
+    path: str, version: int, op: str = "", parent: int | None = None
+) -> None:
+    """Commit a fully-written snapshot: land its marker (recording the
+    op kind and the parent version, when given), then flip the
+    pointer to it."""
+    marker = os.path.join(_version_dir(path, version), _MARKER)
+    with open(marker, "w", encoding="utf-8") as fh:
+        fh.write(op)
+        if parent is not None:
+            fh.write(f"\nparent={parent}")
+    _flip_pointer(path, version)
+
+
+def _marker_lines(path: str, version: int) -> list[str]:
+    marker = os.path.join(_version_dir(path, version), _MARKER)
+    with open(marker, encoding="utf-8") as fh:
+        return fh.read().strip().splitlines()
+
+
+def _op_of(path: str, version: int) -> str:
+    """Operation kind recorded in a committed version's marker ("" for
+    plain snapshots and markers from before op recording existed)."""
+    lines = _marker_lines(path, version)
+    return lines[0].strip() if lines else ""
+
+
+def _parent_of(path: str, version: int) -> int | None:
+    """The version this commit was computed against (None for an
+    initial snapshot). Markers from before parent recording fall back
+    to the previous committed version — correct for every linear
+    history, which is all that could exist then."""
+    for line in _marker_lines(path, version)[1:]:
+        if line.startswith("parent="):
+            return int(line.split("=", 1)[1])
+    prior = [c for c in list_versions(path) if c < version]
+    return prior[-1] if prior else None
+
+
+def _lineage(path: str, version: int) -> list[int]:
+    """The pointer lineage ending at ``version``, oldest first: the
+    walk follows each marker's recorded parent, so branches orphaned
+    by a rollback are excluded. Stops at a vacuumed ancestor —
+    loudness about the gap is the range readers' job (they know their
+    bounds)."""
+    committed = set(list_versions(path))
+    chain = [version]
+    while True:
+        parent = _parent_of(path, chain[-1])
+        if parent is None or parent not in committed:
+            break
+        chain.append(parent)
+    return list(reversed(chain))
+
+
+# ---- manifest and data files ---------------------------------------------
+
+
+def _walk_data_files(vdir: str) -> list[str]:
+    """Relative paths of a directory's parquet data files by LISTING
+    (walk, so partitioned layouts work); ``_index`` and other
+    _-prefixed entries are excluded the same way Spark's reader
+    excludes them. Used for the delta (freshly-written files, no
+    manifest yet) and as the legacy fallback — committed versions are
+    planned from their manifest instead."""
+    out = []
+    for dirpath, dirnames, filenames in os.walk(vdir):
+        dirnames[:] = [
+            d for d in dirnames if not d.startswith(("_", "."))
+        ]
+        for f in filenames:
+            if f.endswith(".parquet") and not f.startswith(("_", ".")):
+                out.append(
+                    os.path.relpath(os.path.join(dirpath, f), vdir)
+                )
+    return sorted(out)
+
+
+def _manifest_rows(vdir: str) -> list[dict] | None:
+    """The version's committed ``_manifest`` as sorted dict rows
+    ``{"file", "size_bytes", "home"}``, or None for versions committed
+    before manifests existed (fall back to listing). ``home`` is the
+    version whose DIRECTORY physically stores the file — the data
+    plane's source of truth: hard-link commits self-home every row
+    (the file was linked into this very directory), reference commits
+    (``link_mode="reference"``) carry untouched files as rows pointing
+    at the file's ORIGINAL version directory, the object-store data
+    plane (no link syscall exists there). Manifests written before the
+    column existed are self-homed by construction. Read driver-side
+    with pyarrow — metadata-sized, no Spark job."""
+    import pyarrow.parquet as pq
+
+    d = os.path.join(vdir, _MANIFEST_DIR)
+    if not os.path.isdir(d):
+        return None
+    own = _own_version(vdir)
+    out: list[dict] = []
+    for part in sorted(os.listdir(d)):
+        if not part.endswith(".parquet"):
+            continue
+        t = pq.read_table(os.path.join(d, part))
+        files = t.column("file").to_pylist()
+        sizes = t.column("size_bytes").to_pylist()
+        homes = (
+            t.column("home").to_pylist()
+            if "home" in t.column_names
+            else [own] * len(files)
+        )
+        out.extend(
+            {"file": f, "size_bytes": s, "home": h if h is not None else own}
+            for f, s, h in zip(files, sizes, homes)
+        )
+    return sorted(out, key=lambda r: r["file"])
+
+
+def _manifest_entries(vdir: str) -> list[tuple[str, int]] | None:
+    """Compatibility view of :func:`_manifest_rows`: sorted
+    ``(relative file, size_bytes)`` tuples (tooling + tests)."""
+    rows = _manifest_rows(vdir)
+    if rows is None:
+        return None
+    return [(r["file"], r["size_bytes"]) for r in rows]
+
+
+def _write_manifest(vdir: str, rows: list[dict]) -> None:
+    """Land the version's file manifest BEFORE its marker (same commit
+    discipline as ``_index``): one row per data file with its size and
+    its HOME version (the directory that physically stores it). The
+    manifest — not a directory listing — is the planning source of
+    truth for every read/DML of a committed version, so planning cost
+    is one metadata-sized parquet read instead of an O(file-count)
+    filesystem walk, and works identically on object stores that have
+    no cheap recursive listing."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rows = sorted(rows, key=lambda r: r["file"])
+    tbl = pa.table(
+        {
+            "file": [r["file"] for r in rows],
+            "size_bytes": [r["size_bytes"] for r in rows],
+            "home": [r["home"] for r in rows],
+        },
+        schema=pa.schema(
+            [
+                ("file", pa.string()),
+                ("size_bytes", pa.int64()),
+                ("home", pa.int64()),
+            ]
+        ),
+    )
+    d = os.path.join(vdir, _MANIFEST_DIR)
+    os.makedirs(d, exist_ok=True)
+    pq.write_table(tbl, os.path.join(d, "part-0.parquet"))
+
+
+def _sized(vdir: str, rels: list[str]) -> list[dict]:
+    """Stat the given files into self-homed manifest rows — called
+    only on the DELTA (files this commit wrote into ``vdir``), never
+    the whole snapshot."""
+    own = _own_version(vdir)
+    return [
+        {
+            "file": rel,
+            "size_bytes": os.path.getsize(os.path.join(vdir, rel)),
+            "home": own,
+        }
+        for rel in rels
+    ]
+
+
+def _data_files(vdir: str) -> list[str]:
+    """Relative paths of the snapshot's parquet data files: from the
+    committed ``_manifest`` when the version has one (metadata-sized
+    parquet read — the source of truth), else by walking (legacy
+    versions, and mid-commit directories whose manifest has not landed
+    yet — exactly the delta the commit is discovering)."""
+    m = _manifest_rows(vdir)
+    if m is not None:
+        return [r["file"] for r in m]
+    return _walk_data_files(vdir)
+
+
+def _resolved_rows(path: str, version: int) -> list[dict]:
+    """The version's manifest rows with an ``abs`` key resolved
+    through each row's HOME version directory — the one place the
+    logical file set becomes physical paths. Legacy versions without a
+    manifest are self-homed by construction (every file was written or
+    linked into their own directory) and have ``size_bytes`` None."""
+    vdir = _version_dir(path, version)
+    rows = _manifest_rows(vdir)
+    if rows is None:
+        rows = [
+            {"file": f, "size_bytes": None, "home": version}
+            for f in _walk_data_files(vdir)
+        ]
+    for r in rows:
+        r["abs"] = os.path.join(_version_dir(path, r["home"]), r["file"])
+    return rows
+
+
+def _stored_schema(path: str, version: int):
+    """The version's committed logical schema (``_SCHEMA``) as a
+    StructType, or None for snapshots committed before schema tracking
+    existed."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    p = os.path.join(_version_dir(path, version), _SCHEMA_FILE)
+    if not os.path.exists(p):
+        return None
+    with open(p, encoding="utf-8") as fh:
+        return StructType.fromJson(json.loads(fh.read()))
+
+
+def _partition_values(rel: str) -> dict[str, str | None]:
+    """Partition-column values encoded in a relative file path's
+    directory segments (``k=3/tag=a/part-....parquet`` →
+    ``{"k": "3", "tag": "a"}``), URL-decoded the way Spark encodes
+    them; Hive's NULL sentinel decodes to None. Flat paths → {}."""
+    from urllib.parse import unquote
+
+    out: dict[str, str | None] = {}
+    for seg in rel.replace(os.sep, "/").split("/")[:-1]:
+        k, _, v = seg.partition("=")
+        v = unquote(v)
+        out[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else v
+    return out
+
+
+# ---- change feed ---------------------------------------------------------
+
+
+def _feed_plan(path: str, version: int) -> tuple[str | None, list[dict]]:
+    """Where committed ``version``'s change feed comes from, as
+    ``(change_type, rows)`` — ``rows`` carry ``file`` and ``abs``:
+
+    - a DML version reads its recorded ``_cdf`` store:
+      ``(None, its parquet files)`` — the rows carry the feed columns;
+    - a TRUE initial snapshot (no recorded parent, op write/"") is
+      all-inserts: ``("insert", every file)``. Gating on "first
+      remaining committed version" instead would let a full replace
+      whose ancestors were vacuumed masquerade as a bootstrap and
+      silently drop its implicit deletes;
+    - an append's inserts are the files new to it, diffed against its
+      RECORDED parent (after a rollback the numerically previous
+      version is an orphaned branch): ``("insert", new files)`` —
+      FileNotFoundError when that parent was vacuumed;
+    - a compaction is a physical-layout no-op: ``("insert", [])``;
+    - anything else (a later full ``write()`` replace) has no
+      row-level derivation: ValueError."""
+    vdir = _version_dir(path, version)
+    cdf = os.path.join(vdir, _CDF_DIR)
+    if os.path.isdir(cdf):
+        return None, [
+            {"file": f, "abs": os.path.join(cdf, f)}
+            for f in _walk_data_files(cdf)
+        ]
+    op = _op_of(path, version)
+    parent = _parent_of(path, version)
+    if parent is None and op in ("write", ""):
+        return "insert", _resolved_rows(path, version)
+    if op == "compact":
+        return "insert", []
+    if op == "append":
+        if parent is None or parent not in list_versions(path):
+            raise FileNotFoundError(
+                f"cannot derive changes for append v={version}: its "
+                "parent snapshot was vacuumed"
+            )
+        prev = set(_data_files(_version_dir(path, parent)))
+        return "insert", [
+            r for r in _resolved_rows(path, version) if r["file"] not in prev
+        ]
+    raise ValueError(
+        f"no change feed for v={version} (op={op or 'unknown'}): a full "
+        "snapshot replace has no row-level change derivation"
+    )
+
+
+# ---- plain versioned datasets --------------------------------------------
+
+
 def write_version(
     df: DataFrame, path: str, partition_cols: tuple[str, ...] = ()
 ) -> int:
@@ -95,22 +454,12 @@ def write_version(
 def _write_version_locked(
     df: DataFrame, path: str, partition_cols: tuple[str, ...] = ()
 ) -> int:
-    os.makedirs(path, exist_ok=True)
-    existing = [
-        int(e[2:]) for e in os.listdir(path) if e.startswith("v=")
-    ]  # incl. crashed marker-less dirs: never reuse their numbers
-    version = max(existing, default=0) + 1
-    vdir = _version_dir(path, version)
+    version = _next_version(path)
     writer = df.write.mode("errorifexists")
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
-    writer.parquet(vdir)
-    with open(os.path.join(vdir, _MARKER), "w", encoding="utf-8"):
-        pass
-    tmp = os.path.join(path, f"{_POINTER}.tmp")
-    with open(tmp, "w", encoding="utf-8") as fh:
-        fh.write(str(version))
-    os.replace(tmp, os.path.join(path, _POINTER))
+    writer.parquet(_version_dir(path, version))
+    _publish(path, version)
     return version
 
 
@@ -119,13 +468,9 @@ def read_version(
 ) -> DataFrame:
     """Time travel: read a specific committed snapshot, or the pointer's
     target by default."""
-    if version is None:
-        version = latest_version(path)
-        if version is None:
-            raise FileNotFoundError(f"no committed versions under {path}")
-    if version not in list_versions(path):
-        raise FileNotFoundError(f"version {version} not committed under {path}")
-    return spark.read.parquet(_version_dir(path, version))
+    return spark.read.parquet(
+        _version_dir(path, _resolve_version(path, version))
+    )
 
 
 def rollback(path: str, version: int) -> None:
@@ -143,10 +488,7 @@ def rollback(path: str, version: int) -> None:
             raise FileNotFoundError(
                 f"version {version} not committed under {path}"
             )
-        tmp = os.path.join(path, f"{_POINTER}.tmp")
-        with open(tmp, "w", encoding="utf-8") as fh:
-            fh.write(str(version))
-        os.replace(tmp, os.path.join(path, _POINTER))
+        _flip_pointer(path, version)
 
 
 def vacuum(path: str, keep_last: int = 2) -> list[int]:
@@ -170,7 +512,7 @@ def _reserved_live(vdir: str) -> bool:
     from bigdatalab_spark.sources.locks import _holder, _pid_gone
     import socket
 
-    stamp = os.path.join(vdir, "_RESERVED")
+    stamp = os.path.join(vdir, _RESERVED)
     if not os.path.exists(stamp):
         return False
     pid, host = _holder(stamp)
@@ -185,30 +527,15 @@ def _referenced_homes(path: str, retained: set[int]) -> set[int]:
     """Versions whose directories physically HOME files referenced by
     the RETAINED versions' manifests (the managed facade's reference
     data plane) — deleting those directories would destroy live data
-    of surviving versions. Driver-side pyarrow read of one manifest
-    column, metadata-sized; manifests predating the ``home`` column
-    are self-homed by construction and contribute nothing beyond
-    their own (retained) version."""
-    import pyarrow.parquet as pq
-
+    of surviving versions. Versions without a manifest, and rows
+    predating the ``home`` column, are self-homed by construction and
+    contribute nothing beyond their own (retained) version."""
     homes: set[int] = set()
     for v in retained:
-        d = os.path.join(_version_dir(path, v), "_manifest")
-        if not os.path.isdir(d):
-            continue
-        for part in sorted(os.listdir(d)):
-            if not part.endswith(".parquet") or part.startswith(("_", ".")):
-                continue
-            f = os.path.join(d, part)
-            if "home" not in pq.read_schema(f).names:
-                continue
-            homes |= {
-                h
-                for h in pq.read_table(f, columns=["home"])
-                .column("home")
-                .to_pylist()
-                if h is not None
-            }
+        homes |= {
+            r["home"]
+            for r in _manifest_rows(_version_dir(path, v)) or ()
+        }
     return homes
 
 
@@ -391,8 +718,7 @@ def _merge_into_versioned_locked(
         order_col,
     )
 
-    existing = [int(e[2:]) for e in os.listdir(path) if e.startswith("v=")]
-    version = max(existing, default=0) + 1
+    version = _next_version(path)
     vdir = _version_dir(path, version)
     # 1) write the rewritten partitions fresh into the invisible snapshot
     merged.write.mode("errorifexists").partitionBy(*partition_cols).parquet(vdir)
@@ -430,12 +756,7 @@ def _merge_into_versioned_locked(
             "Retry to re-merge against the new current version."
         )
     # commit marker, then atomic pointer flip
-    with open(os.path.join(vdir, _MARKER), "w", encoding="utf-8"):
-        pass
-    tmp = os.path.join(path, f"{_POINTER}.tmp")
-    with open(tmp, "w", encoding="utf-8") as fh:
-        fh.write(str(version))
-    os.replace(tmp, os.path.join(path, _POINTER))
+    _publish(path, version)
     return {
         "version": version,
         "partitions_rewritten": len(affected),

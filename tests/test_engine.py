@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 from bigdatalab_spark.engine import Engine
 
 
@@ -207,6 +209,17 @@ def test_full_oracle_artifact_covers_entire_registry():
     failed = sorted(n for n, r in data["results"].items() if not r["ok"])
     assert not failed, f"{latest.name} records failures: {failed}"
     assert data["n_pass"] == data["n_queries"] == len(data["results"])
+
+
+def test_local_cpus_defaults_to_affinity_set(monkeypatch):
+    """Without SPARK_GRAFT_CPUS the local core count is the process's
+    CPU affinity set, not a constant; the variable still overrides."""
+    from bigdatalab_spark.session import _local_cpus
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert _local_cpus() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert _local_cpus() == 3
 
 
 def test_local_split_bytes_derivation(tmp_path):

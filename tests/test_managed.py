@@ -879,19 +879,23 @@ def test_managed_change_feed_cursor(spark, tmp_path):
         t.changes_between(2)
 
 
-def test_managed_changes_data_source(spark, tmp_path):
+@pytest.mark.parametrize("link_mode", ["hardlink", "reference"])
+def test_managed_changes_data_source(spark, tmp_path, link_mode):
     """The change feed as a registered Spark data source
     (format 'managed_changes', batch + streaming): the batch read of a
     version range equals changes_between row-for-row; the stream
     bootstraps from the initial snapshot and a checkpointed restart
     delivers ONLY new versions (exactly-once); pre-evolution rows are
     NULL-padded to the stream schema; vacuumed history and full
-    replaces fail loudly."""
+    replaces fail loudly. Both data planes: under ``reference`` the
+    carried files stay homed in older version directories, resolved
+    through the manifest by both readers."""
     from bigdatalab_spark.sources.pyds import register_python_sources
+    from bigdatalab_spark.sources.versioned import _manifest_rows
 
     register_python_sources(spark)
     root = str(tmp_path / "t")
-    t = ManagedTable(spark, root, index_cols=("k",))
+    t = ManagedTable(spark, root, index_cols=("k",), link_mode=link_mode)
     t.write(_mk(spark, 0, 100).repartitionByRange(2, "k").sortWithinPartitions("k"))
     t.delete_range("k", 10, 19)
     t.append(
@@ -899,6 +903,8 @@ def test_managed_changes_data_source(spark, tmp_path):
             "extra", (F.col("k") * 3).cast("long")
         )
     )
+    homes = {r["home"] for r in _manifest_rows(os.path.join(root, "v=3"))}
+    assert (homes == {3}) == (link_mode == "hardlink")
 
     # batch: whole feed == changes_between(first, latest)
     got = spark.read.format("managed_changes").load(root)
@@ -1239,7 +1245,7 @@ def test_managed_manifest_metadata_plane(spark, tmp_path):
     fallback, with the next commit writing a full manifest again."""
     import shutil
 
-    from bigdatalab_spark.sources.managed import (
+    from bigdatalab_spark.sources.versioned import (
         _manifest_entries,
         _walk_data_files,
     )
@@ -1411,7 +1417,7 @@ def test_managed_optimistic_concurrent_appends(spark, tmp_path):
     assert got.filter("k between 1000 and 1049").count() == 50
     assert got.filter("k between 2000 and 2049").count() == 50
     # manifest/index cover every file of the rebased snapshot
-    from bigdatalab_spark.sources.managed import (
+    from bigdatalab_spark.sources.versioned import (
         _manifest_entries,
         _walk_data_files,
     )

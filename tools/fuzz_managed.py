@@ -26,7 +26,10 @@ Ops drawn per step (seeded PRNG — deterministic, replayable):
   replay        full-feed replay: changes_between(lineage[0]) applied
                 to an empty dict (in commit-version order) must
                 rebuild the model exactly; vacuumed ancestry raising
-                loudly is the accepted alternative
+                loudly is the accepted alternative. Differential: the
+                registered ``managed_changes`` source over the same
+                range must return the same rows, or raise exactly
+                when changes_between raises
   clone         zero-copy shallow clone reads back the model and
                 bootstraps its own feed as all-inserts
 
@@ -44,16 +47,20 @@ from __future__ import annotations
 
 import json
 import random
+import re
 import shutil
 import sys
 import tempfile
+from collections import Counter
 
 
 def run_seed(spark, seed: int, n_ops: int) -> None:
     from pyspark.sql import functions as F
 
     from bigdatalab_spark.sources.managed import ManagedTable
+    from bigdatalab_spark.sources.pyds import register_python_sources
 
+    register_python_sources(spark)
     rng = random.Random(seed)
     scratch = tempfile.mkdtemp(prefix=f"fuzz_managed_{seed}_")
     root = scratch + "/t"
@@ -365,8 +372,10 @@ def run_seed(spark, seed: int, n_ops: int) -> None:
                     _data_files(_version_dir(root, r["version"]))
                 )
         elif op == "replay":
+            from bigdatalab_spark.sources.versioned import _parent_of
+
             first = t.lineage()[0]
-            parent = t._parent_of(first)
+            parent = _parent_of(root, first)
             if parent is None:
                 # true initial snapshot on-lineage: the feed alone
                 # rebuilds the table from empty
@@ -379,10 +388,31 @@ def run_seed(spark, seed: int, n_ops: int) -> None:
                 start = dict(journal[parent][0])
             else:
                 continue
+            source = (
+                spark.read.format("managed_changes")
+                .option("startingVersion", first)
+                .option("endingVersion", t.latest())
+            )
             try:
                 feed = t.changes_between(first)
             except (FileNotFoundError, ValueError):
-                continue  # vacuumed mid-lineage: the designed refusal
+                # vacuumed mid-lineage: the designed refusal — the
+                # registered source must refuse the same range
+                try:
+                    source.load(root).collect()
+                except Exception as exc:  # surfaces wrapped by Spark
+                    assert re.search(
+                        "vacuumed|gone|no change feed", str(exc)
+                    ), f"seed {seed}: managed_changes failed off-design: {exc}"
+                    continue
+                raise AssertionError(
+                    f"seed {seed}: managed_changes served a range "
+                    "changes_between refuses"
+                )
+            got_src = source.load(root)
+            assert Counter(map(tuple, got_src.collect())) == Counter(
+                map(tuple, feed.select(*got_src.columns).collect())
+            ), f"seed {seed}: managed_changes != changes_between"
             cols = feed.columns
             replayed: dict[int, tuple] = start
             rows_sorted = sorted(

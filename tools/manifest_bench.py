@@ -47,6 +47,7 @@ def main() -> int:
 
     from bigdatalab_spark.session import get_session
     from bigdatalab_spark.sources.managed import ManagedTable, _data_files
+    from bigdatalab_spark.sources.versioned import _resolved_rows
 
     grid = [8, 80, 800]
     rows_per_file = 50
@@ -112,7 +113,7 @@ def main() -> int:
             # plane carried files live in their ORIGINAL version dirs
             fresh = [
                 r["file"]
-                for r in t._rows_of(t.latest())
+                for r in _resolved_rows(root, t.latest())
                 if os.stat(r["abs"]).st_ino not in prev_inodes
             ]
 
