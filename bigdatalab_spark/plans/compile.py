@@ -29,14 +29,26 @@ import contextlib
 
 
 @contextlib.contextmanager
+def conf_scope(spark, confs: dict[str, str]):
+    """Set session confs for the duration of the block. On exit —
+    also when the block raises — each key returns to its prior value,
+    or is unset again if it was unset. Safe to nest."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, old in saved.items():
+            if old is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, old)
+
+
 def flat_plan_scope(spark):
     """Compile plans created inside the block without AQE, so cached
     frames materialize — and actions run — as ONE job instead of one
     job per exchange. Restores the session flag on exit; safe to
     nest."""
-    old = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old)
+    return conf_scope(spark, {"spark.sql.adaptive.enabled": "false"})

@@ -541,18 +541,13 @@ def statestore_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partitions from the input bytes (state_partitions_for_bytes) —
     # the state READER below scans one task per state partition either
     # way, so inspection parallelism follows the same derivation
+    from bigdatalab_spark.plans.compile import conf_scope
     from bigdatalab_spark.streaming.jobs import state_partitions_for_bytes
 
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(
-            state_partitions_for_bytes(
-                spark, os.path.getsize(f"{sf_dir}/events.parquet")
-            )
-        ),
+    parts = state_partitions_for_bytes(
+        spark, os.path.getsize(f"{sf_dir}/events.parquet")
     )
-    try:
+    with conf_scope(spark, {"spark.sql.shuffle.partitions": str(parts)}):
         q = (
             counts.writeStream.format("memory")
             .queryName(unique_sink_name("statestore_counts"))
@@ -562,8 +557,6 @@ def statestore_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination(600)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     return (
         grouped_count_state(spark, f"{scratch}/ckpt")
         .select("user_id", F.col("cnt").cast("long").alias("cnt"))

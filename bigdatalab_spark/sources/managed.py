@@ -42,6 +42,8 @@ Scale design:
   at a time, readers never block (they follow the pointer to immutable
   directories), and a pointer CAS before each flip turns any lock
   bypass into a loud ConcurrentWriteError instead of a lost update.
+  ``concurrency`` selects only the lock scope over this one commit
+  path (``ManagedTable._writer_scope``).
 - ROW-LEVEL DML (delete_where/update_where/merge_into + the _range
   variants) is copy-on-write file surgery: one attribution scan —
   pruned through the stored index whenever the predicate/key bounds an
@@ -325,8 +327,8 @@ def _read_index_table(idx_dir: str):
 class CommitConflictError(ConcurrentWriteError):
     """An optimistic transaction lost its race: a commit that landed
     after the transaction's base version touched files the transaction
-    read. The work is rolled back (the reserved version directory is
-    removed); re-run against the new current version."""
+    read. The work is rolled back (the staging directory is removed);
+    re-run against the new current version."""
 
 
 class ManagedTable:
@@ -337,11 +339,12 @@ class ManagedTable:
     (possibly with NULL stats for files that predate a column — such
     files are always-candidates, never dropped).
 
-    ``concurrency`` picks the writer protocol:
+    ``concurrency`` selects where the writer lock is held; both values
+    run one commit path (:meth:`_writer_scope`, :meth:`_commit_staged`):
 
-    - ``"exclusive"`` (default): every mutation holds the table's
-      writer lock across its whole read-modify-write — one writer at a
-      time, concurrent writers fail fast. Simple, serializable.
+    - ``"exclusive"`` (default): across the whole read-modify-write —
+      one writer at a time, concurrent writers fail fast. Simple,
+      serializable.
     - ``"optimistic"``: mutations COMPUTE against a pinned base
       snapshot with NO lock held (the expensive Spark work runs
       concurrently), then take a short commit critical section that
@@ -543,21 +546,35 @@ class ManagedTable:
         ``writer_options`` pass through to the parquet writer (e.g.
         ``parquet.block.size`` to control row-group granularity)."""
         with dataset_write_lock(self.path, "managed_write"):
-            current = latest_version(self.path)
-            version, vdir = self._allocate()
-            writer = df.write.mode("errorifexists")
-            if partition_cols:
-                writer = writer.partitionBy(*partition_cols)
-            for k, v in (writer_options or {}).items():
-                writer = writer.option(k, v)
-            writer.parquet(vdir)
-            files = _walk_data_files(vdir)
-            self._write_index(vdir, new_files=files)
-            return self._land(
-                version, vdir, current, "write", df.schema,
-                tuple(partition_cols), files,
-                stream_batch_id=stream_batch_id,
+            return self._write_snapshot(
+                df, latest_version(self.path), partition_cols,
+                writer_options, stream_batch_id,
             )
+
+    def _write_snapshot(
+        self,
+        df: DataFrame,
+        current: int | None,
+        partition_cols: tuple[str, ...] = (),
+        writer_options: dict | None = None,
+        stream_batch_id: int | None = None,
+    ) -> int:
+        """Land ``df`` as a full snapshot on top of ``current`` (the
+        caller holds the writer lock)."""
+        version, vdir = self._allocate()
+        writer = df.write.mode("errorifexists")
+        if partition_cols:
+            writer = writer.partitionBy(*partition_cols)
+        for k, v in (writer_options or {}).items():
+            writer = writer.option(k, v)
+        writer.parquet(vdir)
+        files = _walk_data_files(vdir)
+        self._write_index(vdir, new_files=files)
+        return self._land(
+            version, vdir, current, "write", df.schema,
+            tuple(partition_cols), files,
+            stream_batch_id=stream_batch_id,
+        )
 
     def append(self, df: DataFrame) -> int:
         """Append-as-new-version: the previous snapshot's data files are
@@ -565,54 +582,51 @@ class ManagedTable:
         only ``df``'s new files are written + footer-probed; the
         previous index rows are reused verbatim (file names are
         relative, and a linked file's stats are its stats). Cost is
-        proportional to the APPENDED data, not the table.
+        proportional to the APPENDED data, not the table. Appends read
+        no rows, so they rebase onto any snapshot with the same
+        partition layout: two concurrent optimistic appends both land,
+        as consecutive versions.
 
         SCHEMA EVOLUTION: ``df`` may add brand-new columns (the stored
         schema grows; linked pre-evolution files read back with NULLs
         for them, and an indexed evolved column gives them NULL stats =
         always-candidates). Dropping or re-typing existing columns is
         refused loudly — see :meth:`_evolve_schema`."""
-        if self.concurrency == "optimistic":
-            return self._append_optimistic(df)
-        with dataset_write_lock(self.path, "managed_append"):
-            current = latest_version(self.path)
-            if current is None:
-                # first append = first snapshot; same commit protocol
-                version, vdir = self._allocate()
-                df.write.mode("errorifexists").parquet(vdir)
-                files = _walk_data_files(vdir)
-                self._write_index(vdir, new_files=files)
-                return self._land(
-                    version, vdir, current, "write", df.schema, (), files
-                )
-            prev = _version_dir(self.path, current)
-            prev_files = _data_files(prev)
-            new_schema = self._evolve_schema(current, df)
-            version, vdir = self._allocate()
-            # a partitioned table's delta lands under the same
-            # col=val/ layout (partition columns are table metadata,
-            # recorded at write() time)
-            pcols = self.partition_cols_of(current)
-            writer = df.write.mode("errorifexists")
-            if pcols:
-                writer = writer.partitionBy(*pcols)
-            writer.parquet(vdir)
-            new_files = set(_walk_data_files(vdir))
-            clash = new_files & set(prev_files)
-            if clash:  # astronomically unlikely (UUIDs)
-                raise ConcurrentWriteError(
-                    f"append file-name collision on {sorted(clash)[0]}"
-                )
-            carried = self._carry(current, None, vdir)
-            self._write_index(
-                vdir,
-                new_files=sorted(new_files),
-                reuse_from=os.path.join(prev, _INDEX_DIR),
-            )
-            return self._land(
-                version, vdir, current, "append", new_schema, pcols,
-                sorted(new_files), carried,
-            )
+        with self._writer_scope("append") as base:
+            if base is None:
+                # first append = first snapshot, taken in the commit
+                # scope: a concurrent optimistic first-append QUEUES
+                # briefly, then either bootstraps (it won) or appends
+                # onto the winner's snapshot
+                with self._writer_scope("append", commit=True):
+                    if latest_version(self.path) is None:
+                        return self._write_snapshot(df, None)
+                # only an unlocked scope gets here: the winner's
+                # snapshot is the base, checked like any other
+                base = latest_version(self.path)
+                self._guard_granularity_upgrade(base, "append")
+
+            def write_delta(work: str, pcols: tuple[str, ...]) -> None:
+                # a partitioned table's delta lands under the same
+                # col=val/ layout (partition columns are table
+                # metadata, recorded at write() time)
+                writer = df.write.mode("append")
+                if pcols:
+                    writer = writer.partitionBy(*pcols)
+                writer.parquet(work)
+
+            def rebase(current: int, pcols: tuple[str, ...]):
+                if self.partition_cols_of(current) != pcols:
+                    raise CommitConflictError(
+                        f"optimistic append on {self.path}: the table's "
+                        f"partition layout changed from {pcols} to "
+                        f"{self.partition_cols_of(current)} while the "
+                        "delta was being written — recompute against "
+                        "the current version"
+                    )
+                return None, self._evolve_schema(current, df)
+
+            return self._commit_staged("append", base, write_delta, rebase)
 
     def compact(
         self,
@@ -783,10 +797,7 @@ class ManagedTable:
         change feed records update_preimage/update_postimage pairs for
         matches and insert rows for new keys."""
         keys = (keys,) if isinstance(keys, str) else tuple(keys)
-        if self.concurrency == "optimistic":
-            # compute against a pinned base with NO lock held; the
-            # short commit section validates + rebases (class docstring)
-            current = latest_version(self.path)
+        with self._writer_scope("merge") as current:
             if current is None:
                 raise FileNotFoundError(
                     f"no committed versions under {self.path}"
@@ -796,7 +807,7 @@ class ManagedTable:
                 return current
             scan_files, touched, new_df, cdf, bounds, cached = plan
             try:
-                return self._commit_cow_optimistic(
+                return self._commit_cow(
                     current,
                     scan_files,
                     touched,
@@ -805,32 +816,6 @@ class ManagedTable:
                     "merge",
                     stream_batch_id=stream_batch_id,
                     merge_bounds=bounds,
-                )
-            finally:
-                for c in cached:
-                    c.unpersist()
-        with dataset_write_lock(self.path, "managed_merge"):
-            current = latest_version(self.path)
-            if current is None:
-                raise FileNotFoundError(
-                    f"no committed versions under {self.path}"
-                )
-            plan = self._merge_plan(current, source, keys, when_matched)
-            if plan is None:
-                return current
-            _scan_files, touched, new_df, cdf, _bounds, cached = plan
-            prev = _version_dir(self.path, current)
-            all_files = _data_files(prev)
-            try:
-                return self._commit_cow(
-                    current,
-                    prev,
-                    all_files,
-                    touched,
-                    new_df,
-                    cdf,
-                    "merge",
-                    stream_batch_id=stream_batch_id,
                 )
             finally:
                 for c in cached:
@@ -1110,20 +1095,17 @@ class ManagedTable:
         (optionally index-pruned), rewrite only touched files, link the
         rest, record the change feed, commit."""
         cond = F.expr(condition) if isinstance(condition, str) else condition
-        if self.concurrency == "optimistic":
-            # compute against a pinned base with NO lock held; the
-            # short commit section validates + rebases (class docstring)
-            current = latest_version(self.path)
+        with self._writer_scope(op) as current:
             if current is None:
                 raise FileNotFoundError(
                     f"no committed versions under {self.path}"
                 )
             plan = self._dml_plan(current, op, cond, assignments, prune)
             if plan is None:
-                return current
+                return current  # no matches: the table is unchanged
             scan_files, touched, new_df, cdf, cached = plan
             try:
-                return self._commit_cow_optimistic(
+                return self._commit_cow(
                     current,
                     scan_files,
                     touched,
@@ -1134,25 +1116,6 @@ class ManagedTable:
                     # files against the predicate's indexed range (None =
                     # unbounded predicate: any added file conflicts)
                     pred_bounds=tuple(prune[:3]) if prune else None,
-                )
-            finally:
-                for c in cached:
-                    c.unpersist()
-        with dataset_write_lock(self.path, f"managed_{op}"):
-            current = latest_version(self.path)
-            if current is None:
-                raise FileNotFoundError(
-                    f"no committed versions under {self.path}"
-                )
-            plan = self._dml_plan(current, op, cond, assignments, prune)
-            if plan is None:
-                return current  # no matches: the table is unchanged
-            _scan_files, touched, new_df, cdf, cached = plan
-            prev = _version_dir(self.path, current)
-            all_files = _data_files(prev)
-            try:
-                return self._commit_cow(
-                    current, prev, all_files, touched, new_df, cdf, op
                 )
             finally:
                 for c in cached:
@@ -1317,21 +1280,24 @@ class ManagedTable:
 
     def _commit_cow(
         self,
-        current: int,
-        prev: str,
-        all_files: list[str],
+        base: int,
+        read_set: list[str],
         touched: list[str],
         new_df: DataFrame,
         cdf: DataFrame,
         op: str,
         stream_batch_id: int | None = None,
+        merge_bounds: tuple | None = None,
+        pred_bounds: tuple | None = None,
     ) -> int:
-        """Land a copy-on-write version: write the rewritten rows,
-        hard-link every untouched file, reuse the linked files' index
-        rows + footer-probe only the new files, write the change feed
-        (and the stream-batch marker, if any), commit (marker records
-        ``op``)."""
-        version, vdir = self._allocate()
+        """Land a copy-on-write version planned against ``base``: the
+        rewrite and the change feed are written as two overlapped Spark
+        jobs, then the commit scope validates against every commit
+        since ``base`` (:meth:`_validate_rebase`) and rebases — the
+        current snapshot's files minus ``touched`` are carried with
+        their index rows. The feed is written without
+        ``_commit_version``: the number is allocated at commit, and
+        both feed readers stamp it from the version directory."""
         # optimized write: the rewrite is delta-sized (touched files'
         # rows + the merge batch), but it arrives on shuffle-partition
         # parallelism — written raw, every DML would scatter ~32 small
@@ -1342,66 +1308,141 @@ class ManagedTable:
         # small extra shuffle is delta-sized by construction.
         n_out = max(1, len(touched) + (1 if op == "merge" else 0))
         new_df = self._cluster_rewrite(new_df, n_out)
-        # claim the version directory ATOMICALLY before the two
-        # overlapped writes start: the change-feed thread creates
-        # vdir/_cdf (and hence vdir) concurrently with the rewrite, so
-        # the rewrite's own errorifexists check would race against its
-        # sibling. An exclusive mkdir is the same collision guard the
-        # errorifexists mode provided (two committers racing to the
-        # same version number: exactly one wins), just earlier — and
-        # both writes then append into the directory this commit owns.
-        try:
-            os.makedirs(vdir, exist_ok=False)
-        except FileExistsError:
-            raise ConcurrentWriteError(
-                f"{op} lost the race for version directory {vdir}"
-            ) from None
-        writer = new_df.write.mode("append")
-        pcols = self.partition_cols_of(current)
-        if pcols:
+
+        def write_delta(work: str, pcols: tuple[str, ...]) -> None:
             # partitioned table: the rewrite lands under the same
             # col=val/ directory layout, so partition pruning keeps
             # composing with the file-skipping index
-            writer = writer.partitionBy(*pcols)
-        def _do_rewrite():
-            with _job_label(self.spark, f"managed {op}: rewrite write"):
-                writer.parquet(vdir)
+            writer = new_df.write.mode("append")
+            if pcols:
+                writer = writer.partitionBy(*pcols)
 
-        def _do_cdf():
-            with _job_label(
-                self.spark, f"managed {op}: change-feed write"
-            ):
-                (
-                    cdf.withColumn(_COMMIT_VERSION, F.lit(version))
-                    .write.mode("append")
-                    .parquet(os.path.join(vdir, _CDF_DIR))
+            def _do_rewrite():
+                with _job_label(self.spark, f"managed {op}: rewrite write"):
+                    writer.parquet(work)
+
+            def _do_cdf():
+                with _job_label(
+                    self.spark, f"managed {op}: change-feed write"
+                ):
+                    cdf.write.mode("append").parquet(
+                        os.path.join(work, _CDF_DIR)
+                    )
+
+            self._overlap_writes(_do_rewrite, _do_cdf)
+
+        def rebase(current: int, _pcols: tuple[str, ...]):
+            if current != base:
+                self._validate_rebase(
+                    base, current, read_set, op, merge_bounds, pred_bounds
                 )
+            gone = set(touched)
+            keep = [
+                rel
+                for rel in _data_files(_version_dir(self.path, current))
+                if rel not in gone
+            ]
+            return keep, self.stored_schema(current) or new_df.schema
 
-        self._overlap_writes(_do_rewrite, _do_cdf)
-        written = set(_walk_data_files(vdir))
-        link = [rel for rel in all_files if rel not in touched]
-        clash = written & set(link)
-        if clash:  # astronomically unlikely (UUIDs)
-            raise ConcurrentWriteError(
-                f"{op} file-name collision on {sorted(clash)[0]}"
-            )
-        carried = self._carry(current, link, vdir)
-        self._write_index(
-            vdir,
-            new_files=sorted(written),
-            reuse_from=os.path.join(prev, _INDEX_DIR),
-            reuse_files=set(link),
+        return self._commit_staged(
+            op, base, write_delta, rebase, stream_batch_id
         )
-        return self._land(
-            version, vdir, current, op,
-            self.stored_schema(current) or new_df.schema, pcols,
-            sorted(written), carried, stream_batch_id,
-        )
+
+    def _commit_staged(
+        self,
+        op: str,
+        base: int,
+        write_delta,
+        rebase,
+        stream_batch_id: int | None = None,
+    ) -> int:
+        """The one commit tail of append and the copy-on-write DML.
+        ``write_delta(work, pcols)`` writes the delta into a private
+        staging directory (:meth:`_allocate_staging`) in the base's
+        partition layout, outside the commit scope. Inside it
+        (:meth:`_writer_scope`), ``rebase(current, pcols)`` checks the
+        delta against the current snapshot and returns the files to
+        carry (None = all) and the new schema; then the collision
+        check, the version number (allocated here, so version order is
+        commit order), the rename into ``v=N``, carry, index and
+        :meth:`_land`. A failure before the rename removes the staging
+        directory (a conflict leaves no debris); after it, a
+        marker-less ``v=N`` is left for vacuum, like any crashed
+        commit."""
+        import shutil
+
+        pcols = self.partition_cols_of(base)
+        work = self._allocate_staging()
+        try:
+            write_delta(work, pcols)
+            written = sorted(_walk_data_files(work))
+            with self._writer_scope(op, commit=True):
+                current = latest_version(self.path)
+                if current is None:
+                    raise CommitConflictError(
+                        f"optimistic {op} on {self.path}: the table's "
+                        "versions disappeared mid-transaction"
+                    )
+                keep, schema = rebase(current, pcols)
+                prev = _version_dir(self.path, current)
+                clash = set(written) & set(
+                    _data_files(prev) if keep is None else keep
+                )
+                if clash:  # astronomically unlikely (UUIDs)
+                    raise ConcurrentWriteError(
+                        f"{op} file-name collision on {sorted(clash)[0]}"
+                    )
+                version, vdir = self._allocate()
+                os.remove(os.path.join(work, _RESERVED))
+                os.rename(work, vdir)
+                work = None
+                carried = self._carry(current, keep, vdir)
+                self._write_index(
+                    vdir,
+                    new_files=written,
+                    reuse_from=os.path.join(prev, _INDEX_DIR),
+                    reuse_files=None if keep is None else set(keep),
+                )
+                return self._land(
+                    version, vdir, current, op, schema, pcols, written,
+                    carried, stream_batch_id,
+                )
+        except BaseException:
+            if work is not None:
+                shutil.rmtree(work, ignore_errors=True)
+            raise
+
+    @contextlib.contextmanager
+    def _writer_scope(self, op: str, commit: bool = False):
+        """Where the writer lock is held — the only reader of
+        ``concurrency``. The compute scope yields the base version:
+        exclusive holds the lock from here through the commit (a held
+        lock fails fast); optimistic holds nothing and refuses a commit
+        that would re-probe the whole index in the commit section
+        (:meth:`_guard_granularity_upgrade`). The commit scope
+        (``commit=True``) is a no-op under exclusive, which already
+        holds the lock, and the retrying :meth:`_commit_section` under
+        optimistic."""
+        exclusive = self.concurrency == "exclusive"
+        if commit:
+            with (
+                contextlib.nullcontext()
+                if exclusive
+                else self._commit_section(f"managed_{op}_commit")
+            ):
+                yield
+        elif exclusive:
+            with dataset_write_lock(self.path, f"managed_{op}"):
+                yield latest_version(self.path)
+        else:
+            base = latest_version(self.path)
+            self._guard_granularity_upgrade(base, op)
+            yield base
 
     @contextlib.contextmanager
     def _commit_section(self, what: str, timeout: float | None = None):
         """The optimistic protocol's SHORT commit critical section:
-        unlike the exclusive paths (which fail fast — their planned
+        unlike the exclusive scope (which fails fast — its planned
         input is stale by the time a held lock frees), an optimistic
         commit revalidates and rebases inside the section, so waiting
         is correct: retry acquisition with a small sleep until
@@ -1495,11 +1536,11 @@ class ManagedTable:
             )
 
     def _allocate_staging(self) -> str:
-        """A private SCRATCH directory for an optimistic transaction's
-        unlocked writes (``_txn_<uuid>`` — invisible to readers and to
-        version numbering). The FINAL version number is allocated
-        inside the commit section and the staging dir renamed into
-        place there: numbering at reservation time would let a
+        """A private SCRATCH directory for a transaction's delta
+        (``_txn_<uuid>`` — invisible to readers and to version
+        numbering), written outside the commit scope. The FINAL version
+        number is allocated inside the commit scope and the staging dir
+        renamed into place there: numbering at reservation time would let a
         later-committing transaction carry a SMALLER number, moving
         the pointer backwards and breaking every "versions <= N are
         delivered" feed offset. A ``_RESERVED`` stamp (pid + host,
@@ -1633,178 +1674,6 @@ class ManagedTable:
                         "applied to those rows; recompute against the "
                         "current version"
                     )
-
-    def _commit_cow_optimistic(
-        self,
-        base: int,
-        read_set: list[str],
-        touched: list[str],
-        new_df: DataFrame,
-        cdf: DataFrame,
-        op: str,
-        stream_batch_id: int | None = None,
-        merge_bounds: tuple | None = None,
-        pred_bounds: tuple | None = None,
-    ) -> int:
-        """Optimistic tail of the copy-on-write commit: the delta (the
-        rewritten rows + the change feed) is WRITTEN with no lock held
-        — the expensive Spark work runs concurrently with other
-        writers — then a short critical section validates against
-        every commit since ``base`` (:meth:`_validate_rebase`),
-        REBASES by hard-linking the untouched files of the CURRENT
-        snapshot (which may include files concurrent commits added),
-        and lands index/manifest/schema/marker. On conflict or error
-        the reserved version dir is removed — nothing of the
-        transaction ever becomes visible."""
-        import shutil
-
-        self._guard_granularity_upgrade(base, op)
-        work = self._allocate_staging()
-        try:
-            # same optimized-write clustering as the exclusive path
-            n_out = max(1, len(touched) + (1 if op == "merge" else 0))
-            new_df = self._cluster_rewrite(new_df, n_out)
-            pcols = self.partition_cols_of(base)
-            # append mode: the staging dir exists (and is ours alone);
-            # the change feed is written UNSTAMPED — the commit version
-            # is unknown until the commit section allocates it, and
-            # changes() stamps it from the directory at read time
-            writer = new_df.write.mode("append")
-            if pcols:
-                writer = writer.partitionBy(*pcols)
-
-            def _do_rewrite():
-                with _job_label(
-                    self.spark, f"managed {op}: rewrite write"
-                ):
-                    writer.parquet(work)
-
-            def _do_cdf():
-                with _job_label(
-                    self.spark, f"managed {op}: change-feed write"
-                ):
-                    cdf.write.mode("append").parquet(
-                        os.path.join(work, _CDF_DIR)
-                    )
-
-            self._overlap_writes(_do_rewrite, _do_cdf)
-            written = set(_walk_data_files(work))
-            with self._commit_section(f"managed_{op}_commit"):
-                current = latest_version(self.path)
-                if current is None:
-                    raise CommitConflictError(
-                        f"optimistic {op} on {self.path}: the table's "
-                        "versions disappeared mid-transaction"
-                    )
-                if current != base:
-                    self._validate_rebase(
-                        base, current, read_set, op, merge_bounds,
-                        pred_bounds,
-                    )
-                prev = _version_dir(self.path, current)
-                cur_files = _data_files(prev)
-                not_ours = set(touched)
-                link = [rel for rel in cur_files if rel not in not_ours]
-                clash = written & set(link)
-                if clash:  # astronomically unlikely
-                    raise ConcurrentWriteError(
-                        f"{op} file-name collision on {sorted(clash)[0]}"
-                    )
-                # version number allocated UNDER the lock: commit order
-                # and version order coincide, the pointer only advances
-                version, vdir = self._allocate()
-                os.remove(os.path.join(work, _RESERVED))
-                os.rename(work, vdir)
-                work = vdir
-                # under link_mode="reference" this writes NO per-file
-                # syscalls — the critical section's cost is O(delta),
-                # not O(live files), no matter how large the snapshot
-                carried = self._carry(current, link, vdir)
-                self._write_index(
-                    vdir,
-                    new_files=sorted(written),
-                    reuse_from=os.path.join(prev, _INDEX_DIR),
-                    reuse_files=set(link),
-                )
-                return self._land(
-                    version, vdir, current, op,
-                    self.stored_schema(current) or new_df.schema, pcols,
-                    sorted(written), carried, stream_batch_id,
-                )
-        except BaseException:
-            shutil.rmtree(work, ignore_errors=True)
-            raise
-
-    def _append_optimistic(self, df: DataFrame) -> int:
-        """Append under the optimistic protocol: the new files are
-        written with no lock held; the short commit section links
-        whatever the CURRENT snapshot holds (appends read no rows, so
-        they rebase onto any flat snapshot) and commits. Two
-        concurrent appends both land, as consecutive versions."""
-        import shutil
-
-        if latest_version(self.path) is None:
-            # initial snapshot: acquire through the optimistic
-            # protocol's retrying section — a concurrent first-append
-            # QUEUES briefly instead of failing fast (the optimistic
-            # contract), then either bootstraps (it won) or falls
-            # through to the normal staging append (the winner's
-            # snapshot is its base)
-            with self._commit_section("managed_append"):
-                if latest_version(self.path) is None:
-                    version, vdir = self._allocate()
-                    df.write.mode("errorifexists").parquet(vdir)
-                    files = _walk_data_files(vdir)
-                    self._write_index(vdir, new_files=files)
-                    return self._land(
-                        version, vdir, None, "write", df.schema, (), files
-                    )
-        base = latest_version(self.path)
-        self._guard_granularity_upgrade(base, "append")
-        pcols = self.partition_cols_of(base)
-        work = self._allocate_staging()
-        try:
-            writer = df.write.mode("append")
-            if pcols:
-                writer = writer.partitionBy(*pcols)
-            writer.parquet(work)
-            new_files = set(_walk_data_files(work))
-            with self._commit_section("managed_append_commit"):
-                current = latest_version(self.path)
-                prev = _version_dir(self.path, current)
-                prev_files = _data_files(prev)
-                if self.partition_cols_of(current) != pcols:
-                    raise CommitConflictError(
-                        f"optimistic append on {self.path}: the table's "
-                        f"partition layout changed from {pcols} to "
-                        f"{self.partition_cols_of(current)} while the "
-                        "delta was being written — recompute against "
-                        "the current version"
-                    )
-                new_schema = self._evolve_schema(current, df)
-                if new_files & set(prev_files):  # astronomically unlikely
-                    raise ConcurrentWriteError(
-                        "append file-name collision on "
-                        f"{sorted(new_files & set(prev_files))[0]}"
-                    )
-                version, vdir = self._allocate()
-                os.remove(os.path.join(work, _RESERVED))
-                os.rename(work, vdir)
-                work = vdir
-                # reference mode: zero per-file syscalls in the section
-                carried = self._carry(current, None, vdir)
-                self._write_index(
-                    vdir,
-                    new_files=sorted(new_files),
-                    reuse_from=os.path.join(prev, _INDEX_DIR),
-                )
-                return self._land(
-                    version, vdir, current, "append", new_schema, pcols,
-                    sorted(new_files), carried,
-                )
-        except BaseException:
-            shutil.rmtree(work, ignore_errors=True)
-            raise
 
     def _evolve_schema(self, current: int, df: DataFrame):
         """Schema evolution contract for append: every existing column
@@ -2076,9 +1945,9 @@ class ManagedTable:
         change_type, rows = _feed_plan(self.path, v)
         if change_type is None:
             # the commit version is stamped from the DIRECTORY, the one
-            # authority: optimistic commits write their feed before
-            # their number exists (exclusive commits store the same
-            # value; withColumn replaces it identically)
+            # authority: commits write their feed before their number
+            # exists (feeds of older commits may store the same value;
+            # withColumn replaces it identically)
             feed = self.spark.read.parquet(
                 os.path.join(_version_dir(self.path, v), _CDF_DIR)
             )

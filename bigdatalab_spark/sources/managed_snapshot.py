@@ -79,7 +79,10 @@ from bigdatalab_spark.sources.managed import (
     _cast_partition_value,
     _read_index_table,
 )
-from bigdatalab_spark.sources.managed_stream import _required_schema
+from bigdatalab_spark.sources.managed_stream import (
+    _align_batches,
+    _required_schema,
+)
 from bigdatalab_spark.sources.versioned import (
     _INDEX_DIR,
     _data_files,
@@ -254,48 +257,15 @@ class ManagedSnapshotReader(DataSourceReader):
         return out
 
     def read(self, partition: _FilePartition) -> Iterator:
-        # STREAM batch by batch (bounded task memory at real file
-        # sizes); align each batch to the snapshot's stored schema
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        arrow_schema = to_arrow_schema(self.schema)
         if not getattr(partition, "path", None):
             return  # sentinel for a fully-pruned plan: empty result
-        pf = pq.ParquetFile(partition.path)
-        present = set(pf.schema_arrow.names)
-        constants = getattr(partition, "constants", {}) or {}
-        needed = [
-            f.name
-            for f in arrow_schema
-            if f.name in present and f.name not in constants
-        ]
-        for batch in pf.iter_batches(columns=needed):
-            n = batch.num_rows
-            cols = []
-            for field in arrow_schema:
-                if field.name in constants:
-                    # partition value from the directory name, cast
-                    # from its string encoding to the declared type
-                    val = constants[field.name]
-                    if val is None:
-                        cols.append(pa.nulls(n, type=field.type))
-                    else:
-                        cols.append(
-                            pa.array([val] * n, type=pa.string()).cast(
-                                field.type
-                            )
-                        )
-                elif field.name in present:
-                    col = batch.column(field.name)
-                    if col.type != field.type:
-                        col = col.cast(field.type)
-                    cols.append(col)
-                else:  # pre-evolution file: typed NULL padding
-                    cols.append(pa.nulls(n, type=field.type))
-            yield pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
+        yield from _align_batches(
+            partition.path,
+            to_arrow_schema(self.schema),
+            getattr(partition, "constants", {}),
+        )
 
 
 class ManagedSnapshotDataSource(DataSource):

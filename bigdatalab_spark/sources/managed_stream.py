@@ -159,38 +159,44 @@ def _plan_partitions(
     return out
 
 
-def _read_partition(part: _ChangePartition, arrow_schema) -> Iterator:
-    """Arrow-native task body: STREAM the parquet file batch by batch
-    (bounded task memory — a whole-file read_table would materialize
-    multi-GB files per task at real scale), align each batch to the
-    stream schema (typed NULL padding for pre-evolution files, cast on
-    width mismatches), stamp derived feed columns, yield RecordBatches
-    zero-copy."""
+def _align_batches(
+    path: str,
+    arrow_schema,
+    constants: dict | None = None,
+    synthesized: dict | None = None,
+) -> Iterator:
+    """The Arrow alignment kernel of both managed connectors: STREAM
+    the parquet file batch by batch (bounded task memory — a whole-file
+    read_table would materialize multi-GB files per task at real
+    scale) and align each batch to ``arrow_schema``, zero-copy.
+    ``synthesized`` columns get one value per file, stored or not;
+    ``constants`` (partition values from directory names, None = the
+    Hive NULL sentinel) are cast from their string encoding; stored
+    columns are cast on type mismatch; missing ones (pre-evolution
+    files) are typed NULLs."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    pf = pq.ParquetFile(part.path)
+    constants = constants or {}
+    synthesized = synthesized or {}
+    pf = pq.ParquetFile(path)
     present = set(pf.schema_arrow.names)
-    constants = getattr(part, "constants", {}) or {}
-    synthesized = {"_commit_version"} | set(constants)
-    if part.change_type is not None:
-        synthesized.add("_change_type")
     needed = [
         f.name
         for f in arrow_schema
-        if f.name in present and f.name not in synthesized
+        if f.name in present
+        and f.name not in constants
+        and f.name not in synthesized
     ]
     for batch in pf.iter_batches(columns=needed):
         n = batch.num_rows
         cols = []
         for field in arrow_schema:
-            if field.name == "_change_type" and part.change_type is not None:
+            if field.name in synthesized:
                 cols.append(
-                    pa.array([part.change_type] * n, type=field.type)
+                    pa.array([synthesized[field.name]] * n, type=field.type)
                 )
             elif field.name in constants:
-                # partition-column value from the directory name,
-                # cast from its string encoding to the stream type
                 val = constants[field.name]
                 if val is None:
                     cols.append(pa.nulls(n, type=field.type))
@@ -200,13 +206,6 @@ def _read_partition(part: _ChangePartition, arrow_schema) -> Iterator:
                             field.type
                         )
                     )
-            elif field.name == "_commit_version":
-                # always stamped from the partition (the version
-                # DIRECTORY is the authority): optimistic commits write
-                # their _cdf before the version number exists, so the
-                # stored column may be absent — and when present it
-                # carries this value
-                cols.append(pa.array([part.version] * n, type=field.type))
             elif field.name in present:
                 col = batch.column(field.name)
                 if col.type != field.type:
@@ -215,6 +214,22 @@ def _read_partition(part: _ChangePartition, arrow_schema) -> Iterator:
             else:
                 cols.append(pa.nulls(n, type=field.type))
         yield pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
+
+
+def _read_partition(part: _ChangePartition, arrow_schema) -> Iterator:
+    """Task body of the feed readers. ``_commit_version`` is always
+    stamped from the version DIRECTORY, the authority: feeds are
+    written before their number exists. ``_change_type`` is stamped
+    for derived inserts."""
+    synthesized = {"_commit_version": part.version}
+    if part.change_type is not None:
+        synthesized["_change_type"] = part.change_type
+    yield from _align_batches(
+        part.path,
+        arrow_schema,
+        getattr(part, "constants", {}),
+        synthesized,
+    )
 
 
 def _feed_schema(path: str):

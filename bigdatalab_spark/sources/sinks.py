@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
+from bigdatalab_spark.plans.compile import conf_scope
+
 
 def write_text(df: DataFrame, path: str, single_file: bool = False) -> None:
     """saveAsTextFile (K1): one string column -> text files."""
@@ -199,17 +201,10 @@ def overwrite_partitions(
     """
     if not partition_cols:
         raise ValueError("overwrite_partitions requires partition columns")
-    spark = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    saved = spark.conf.get(key, None)
-    spark.conf.set(key, "dynamic")
-    try:
+    with conf_scope(
+        df.sparkSession, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+    ):
         df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-    finally:
-        if saved is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, saved)
 
 
 def compact_partitions(

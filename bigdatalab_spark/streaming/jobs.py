@@ -282,8 +282,9 @@ def run_stream_to_memory(
     byte count; the drain then runs with
     :func:`state_partitions_for_bytes` partitions (same set/restore
     discipline). Mutually exclusive with ``expected_keys``."""
+    from bigdatalab_spark.plans.compile import conf_scope
+
     spark = result.sparkSession
-    old_parts = None
     if expected_keys is not None and state_input_bytes is not None:
         raise ValueError(
             "pass expected_keys OR state_input_bytes, not both"
@@ -293,10 +294,10 @@ def run_stream_to_memory(
         parts = state_shuffle_partitions(spark, expected_keys)
     elif state_input_bytes is not None:
         parts = state_partitions_for_bytes(spark, state_input_bytes)
+    confs = {}
     if parts is not None:
-        old_parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    try:
+        confs["spark.sql.shuffle.partitions"] = str(parts)
+    with conf_scope(spark, confs):
         writer = (
             result.writeStream.format("memory")
             .queryName(name)
@@ -307,9 +308,6 @@ def run_stream_to_memory(
             writer = writer.option("checkpointLocation", checkpoint_dir)
         q = writer.start()
         q.awaitTermination()
-    finally:
-        if old_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 def run_stream_to_console(

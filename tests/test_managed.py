@@ -329,11 +329,14 @@ def test_managed_delete_where_null_semantics_and_full_scan(spark, tmp_path):
     assert kept == expect
 
 
-def test_managed_update_range_assignments_and_cdf(spark, tmp_path):
+@pytest.mark.parametrize("concurrency", ["exclusive", "optimistic"])
+def test_managed_update_range_assignments_and_cdf(spark, tmp_path, concurrency):
     """update_range: assignments evaluate against the PRE-update row,
     non-matching rows in touched files survive byte-identical, the
     feed carries pre/post image pairs."""
-    t = ManagedTable(spark, str(tmp_path / "t"), index_cols=("k",))
+    t = ManagedTable(
+        spark, str(tmp_path / "t"), index_cols=("k",), concurrency=concurrency
+    )
     t.write(_mk(spark, 0, 400).repartitionByRange(4, "k").sortWithinPartitions("k"))
     v = t.update_range(
         "k", 100, 149,
@@ -356,11 +359,14 @@ def test_managed_update_range_assignments_and_cdf(spark, tmp_path):
         t.update_where("k = 1", {"nope": F.lit(1)})
 
 
-def test_managed_merge_upserts_and_inserts(spark, tmp_path):
+@pytest.mark.parametrize("concurrency", ["exclusive", "optimistic"])
+def test_managed_merge_upserts_and_inserts(spark, tmp_path, concurrency):
     """merge_into: matched keys replaced, new keys inserted, untouched
     files hard-linked, feed records pre/post/insert; duplicate source
     keys and schema mismatches are refused loudly."""
-    t = ManagedTable(spark, str(tmp_path / "t"), index_cols=("k",))
+    t = ManagedTable(
+        spark, str(tmp_path / "t"), index_cols=("k",), concurrency=concurrency
+    )
     t.write(_mk(spark, 0, 600).repartitionByRange(6, "k").sortWithinPartitions("k"))
     f1 = _data_files(str(tmp_path / "t" / "v=1"))
 
@@ -433,11 +439,16 @@ def test_managed_changes_derivations(spark, tmp_path):
         t.changes(4)
 
 
-def test_managed_dml_crash_and_lock_discipline(spark, tmp_path):
+@pytest.mark.parametrize("concurrency", ["exclusive", "optimistic"])
+def test_managed_dml_crash_and_lock_discipline(spark, tmp_path, concurrency):
     """A DML crash after data/CDF writes but before the marker leaves
     the table serving the old version, and vacuum reclaims the debris;
-    DML under a held writer lock is refused."""
-    t = ManagedTable(spark, str(tmp_path / "t"), index_cols=("k",))
+    DML under a held writer lock is refused (the optimistic commit
+    section waits ``commit_timeout`` for it first)."""
+    t = ManagedTable(
+        spark, str(tmp_path / "t"), index_cols=("k",),
+        concurrency=concurrency, commit_timeout=1,
+    )
     t.write(_mk(spark, 0, 200).repartitionByRange(2, "k").sortWithinPartitions("k"))
 
     # simulate the crash: do the rewrite by hand, never commit
@@ -531,7 +542,8 @@ def test_managed_merge_when_matched_condition(spark, tmp_path):
     }
 
 
-def test_managed_merge_stream_exactly_once(spark, tmp_path):
+@pytest.mark.parametrize("concurrency", ["exclusive", "optimistic"])
+def test_managed_merge_stream_exactly_once(spark, tmp_path, concurrency):
     """Streaming MERGE into the facade: first batch creates the table,
     the second merges incrementally (regress-guarded by order_col);
     a forced REPLAY of the last batch (crash between table commit and
@@ -545,7 +557,9 @@ def test_managed_merge_stream_exactly_once(spark, tmp_path):
     src_dir = str(tmp_path / "src")
     os.makedirs(src_dir)
     ckpt = str(tmp_path / "ckpt")
-    t = ManagedTable(spark, str(tmp_path / "t"), index_cols=("k",))
+    t = ManagedTable(
+        spark, str(tmp_path / "t"), index_cols=("k",), concurrency=concurrency
+    )
 
     schema = "k long, seq long, val string"
     spark.createDataFrame(
@@ -604,10 +618,12 @@ def test_managed_merge_stream_exactly_once(spark, tmp_path):
             from bigdatalab_spark.sources.managed import ManagedTable
             from bigdatalab_spark.streaming.jobs import managed_merge_stream
 
-            src, ckpt, troot = sys.argv[1:4]
+            src, ckpt, troot, concurrency = sys.argv[1:5]
             spark = get_session(app_name="managed-merge-replay")
             spark.sparkContext.setLogLevel("ERROR")
-            t = ManagedTable(spark, troot, index_cols=("k",))
+            t = ManagedTable(
+                spark, troot, index_cols=("k",), concurrency=concurrency
+            )
             schema = "k long, seq long, val string"
             q = managed_merge_stream(
                 spark.readStream.schema(schema).parquet(src),
@@ -620,7 +636,10 @@ def test_managed_merge_stream_exactly_once(spark, tmp_path):
     )
     env = dict(os.environ, PYTHONPATH="/root/repo")
     proc = subprocess.run(
-        [sys.executable, str(runner), src_dir, ckpt, str(tmp_path / "t")],
+        [
+            sys.executable, str(runner), src_dir, ckpt,
+            str(tmp_path / "t"), concurrency,
+        ],
         cwd="/root/repo", env=env, capture_output=True, text=True,
         timeout=300,
     )
@@ -1319,7 +1338,7 @@ def test_managed_optimistic_disjoint_dml_rebases(spark, tmp_path):
     assert v2 == 2
 
     # T1 commits: validates v=2's removals against its read-set, rebases
-    v3 = t._commit_cow_optimistic(1, scan1, touched1, new_df1, cdf1, "delete")
+    v3 = t._commit_cow(1, scan1, touched1, new_df1, cdf1, "delete")
     assert v3 == 3
     assert t.lineage() == [1, 2, 3]
     got = t.read()
@@ -1355,7 +1374,7 @@ def test_managed_optimistic_overlapping_dml_aborts(spark, tmp_path):
     scan1, touched1, new_df1, cdf1, _cached1 = plan1
     assert t.delete_range("k", 0, 9) == 2
     with pytest.raises(CommitConflictError, match="removed"):
-        t._commit_cow_optimistic(1, scan1, touched1, new_df1, cdf1, "delete")
+        t._commit_cow(1, scan1, touched1, new_df1, cdf1, "delete")
     # no half-committed version, no staging debris
     assert t.versions() == [1, 2]
     assert not [
@@ -1371,7 +1390,7 @@ def test_managed_optimistic_overlapping_dml_aborts(spark, tmp_path):
     assert bounds == ("k", 1500, 1509)
     t.append(_mk(spark, 1505, 1520, parts=1))  # v3 adds keys IN range
     with pytest.raises(CommitConflictError, match="overlap"):
-        t._commit_cow_optimistic(
+        t._commit_cow(
             2, scan_m, touched_m, new_dfm, cdfm, "merge",
             merge_bounds=bounds,
         )
@@ -1381,7 +1400,7 @@ def test_managed_optimistic_overlapping_dml_aborts(spark, tmp_path):
     plan_s = t._merge_plan(3, src_safe, ("k",), None)
     scan_s, touched_s, new_dfs, cdfs, bounds_s, _cs = plan_s
     t.append(_mk(spark, 9000, 9010, parts=1))  # v4, far away
-    v5 = t._commit_cow_optimistic(
+    v5 = t._commit_cow(
         3, scan_s, touched_s, new_dfs, cdfs, "merge",
         merge_bounds=bounds_s,
     )
@@ -1889,7 +1908,7 @@ def test_managed_serializable_isolation(spark, tmp_path):
     v2 = ws.append(_mk(spark, 500, 505, parts=1))  # blind append, same range
     assert v2 == 2
     scan, touched, new_df, cdf, _cached = plan
-    v3 = ws._commit_cow_optimistic(
+    v3 = ws._commit_cow(
         1, scan, touched, new_df, cdf, "delete",
         pred_bounds=("k", 500, 509),
     )
@@ -1903,7 +1922,7 @@ def test_managed_serializable_isolation(spark, tmp_path):
     assert sz.append(_mk(spark, 500, 505, parts=1)) == 2
     scan, touched, new_df, cdf, _cached = plan
     with pytest.raises(CommitConflictError, match="serializable delete"):
-        sz._commit_cow_optimistic(
+        sz._commit_cow(
             1, scan, touched, new_df, cdf, "delete",
             pred_bounds=("k", 500, 509),
         )
@@ -1920,7 +1939,7 @@ def test_managed_serializable_isolation(spark, tmp_path):
     plan = sz._dml_plan(3, "delete", F.col("k").between(0, 9), None, ("k", 0, 9))
     assert sz.append(_mk(spark, 2000, 2010, parts=1)) == 4
     scan, touched, new_df, cdf, _cached = plan
-    v5 = sz._commit_cow_optimistic(
+    v5 = sz._commit_cow(
         3, scan, touched, new_df, cdf, "delete", pred_bounds=("k", 0, 9)
     )
     assert v5 == 5 and sz.read().filter("k < 10").count() == 0
@@ -1932,7 +1951,7 @@ def test_managed_serializable_isolation(spark, tmp_path):
     assert sz.append(_mk(spark, 3000, 3010, parts=1)) == 6
     scan, touched, new_df, cdf, _cached = plan
     with pytest.raises(CommitConflictError, match="not an indexed range"):
-        sz._commit_cow_optimistic(
+        sz._commit_cow(
             5, scan, touched, new_df, cdf, "delete", pred_bounds=None
         )
 
@@ -2027,7 +2046,7 @@ def test_managed_partitioned_optimistic_reference(spark, tmp_path):
     assert all(f.startswith("p=0/") for f in scan)
     v2 = t.delete_range("p", 1, 1)  # lands first, disjoint partition
     assert v2 == 2
-    v3 = t._commit_cow_optimistic(
+    v3 = t._commit_cow(
         1, scan, touched, new_df, cdf, "delete",
         pred_bounds=("p", 0, 0),
     )

@@ -5,6 +5,7 @@ regression guard.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from bigdatalab_spark.plans import (
@@ -541,3 +542,30 @@ def test_normalization_dedup_stats_shuffles_hashes_not_text(spark, sf_dir):
 
     for m in re.finditer(r"hashpartitioning\(([^)]*)\)", plan):
         assert "text#" not in m.group(1), m.group(0)
+
+
+
+def test_conf_scope_restores_set_and_unset_keys(spark):
+    """conf_scope: a key that was unset comes back unset, a key that
+    was set comes back to its value — on a normal exit and when the
+    body raises."""
+    from bigdatalab_spark.plans.compile import conf_scope
+
+    unset_key = "spark.bdl.test.confScope.unset"
+    set_key = "spark.bdl.test.confScope.set"
+    confs = {unset_key: "x", set_key: "during"}
+    spark.conf.set(set_key, "before")
+    try:
+        with conf_scope(spark, confs):
+            assert spark.conf.get(unset_key) == "x"
+            assert spark.conf.get(set_key) == "during"
+        assert spark.conf.get(unset_key, None) is None
+        assert spark.conf.get(set_key) == "before"
+
+        with pytest.raises(RuntimeError, match="body failed"):
+            with conf_scope(spark, confs):
+                raise RuntimeError("body failed")
+        assert spark.conf.get(unset_key, None) is None
+        assert spark.conf.get(set_key) == "before"
+    finally:
+        spark.conf.unset(set_key)

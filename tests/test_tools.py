@@ -435,3 +435,18 @@ def test_fuzz_managed_smoke():
     out = _run_tool("tools.fuzz_managed", "--seeds=2", "--ops=8")
     assert out["metric"] == "fuzz_managed"
     assert out["n_fail"] == 0 and out["n_pass"] == 2
+
+
+def test_manifest_bench_smoke():
+    """The tool times the optimistic commit section by wrapping
+    ManagedTable._commit_section; every grid row must have measured
+    it (a zero means the wrapper no longer sees the section)."""
+    out = _run_tool(
+        "tools.manifest_bench", "--grid=4,8", "--modes=hardlink,reference"
+    )
+    assert out["metric"] == "managed_commit_vs_live_file_count"
+    for mode in ("hardlink", "reference"):
+        rows = out[mode]["grid"]
+        assert set(rows) == {"4", "8"}
+        for row in rows.values():
+            assert row["optimistic_commit_section_sec"] > 0, (mode, row)
